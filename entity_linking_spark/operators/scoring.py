@@ -310,17 +310,23 @@ def pair_features(
     """
     if "n_shared" in pairs.columns:
         pairs = _with_prior_features(pairs)
-    has_emb = "emb" in payload.columns or "emb_a" in pairs.columns
+    has_emb = "emb" in payload.columns
     # the dual-bucket checkpoint layout persists pairs WITH the a-side
     # payload already attached (pair_payload_half, bucketed on id_b) —
     # attach only the sides still missing
     sides = tuple(s for s in ("a", "b") if f"head_{s}" not in pairs.columns)
+    if ("emb_a" in pairs.columns) != (has_emb and "a" not in sides):
+        # e.g. a resumed pairs_payload_a stage built with another emb_dim
+        raise ValueError(
+            "the pairs' attached a-side payload and the payload disagree on "
+            f"embeddings (pairs emb_a: {'emb_a' in pairs.columns}, payload "
+            f"emb: {has_emb}); build both with the same emb_dim"
+        )
     p = attach_pair_payload(
         pairs,
         payload,
         "id",
-        ["head", "token_cnt", "tfidf"]
-        + (["emb"] if "emb" in payload.columns else []),
+        ["head", "token_cnt", "tfidf"] + (["emb"] if has_emb else []),
         sides=sides,
     )
     head_a, head_b = F.col("head_a"), F.col("head_b")

@@ -64,7 +64,7 @@ def estimated_scan_width(df: DataFrame) -> int | None:
     (and why raw file count under-counts a large multi-row-group file —
     round-4 advice). Returns ``None`` when the estimate isn't cheaply
     available (in-memory frame, non-local scheme, unreadable footer);
-    callers then fall back to the file-count heuristic.
+    ``_widen_input`` then falls back to the file count.
     """
     import math
     import os
@@ -120,13 +120,18 @@ def _widen_input(pages: DataFrame) -> DataFrame:
 
     The narrowness test is ``estimated_scan_width`` (split math + parquet
     row-group cap), NOT raw file count: a few large multi-row-group files
-    already scan wide and must not pay a needless full-corpus shuffle,
-    and in-memory frames (zero files) inherit their source parallelism
-    and are left alone (round-4 advice).
+    already scan wide and must not pay a needless full-corpus shuffle
+    (round-4 advice). Raw file count is only the fallback where that
+    estimate is unavailable (remote inputs, whose footers are not read
+    from the driver). Nor is it ``rdd.getNumPartitions()``: the RDD
+    conversion costs ~1.9s of cold driver time. In-memory frames (zero
+    files) inherit their source parallelism and are left alone.
     """
     n_par = pages.sparkSession.sparkContext.defaultParallelism
     width = estimated_scan_width(pages)
-    if width is not None and width < n_par:
+    if width is None:
+        width = len(pages.inputFiles()) or n_par
+    if width < n_par:
         return pages.repartition(n_par)
     return pages
 
@@ -238,8 +243,9 @@ def link_pages(
     # ``config.id_bits=128`` switches to a two-seed xxhash64 struct —
     # 16 bytes, birthday-safe at the north star's 10^12 docs — which
     # flows through blocking/pairs/CC unchanged (struct ids group, join,
-    # compare and hash natively; tests/test_e2e_f1.py proves 64- and
-    # 128-bit runs produce identical clusters).
+    # compare and hash natively; tests/test_pair_features_v2.py::
+    # test_id_bits_128_parity proves 64- and 128-bit runs produce
+    # identical clusters).
     # Already-integral ids ARE 8 bytes: use them directly (order-
     # preserving, collision-free) and skip both the hash and the
     # end-stage representative restore (min _nid == min id).

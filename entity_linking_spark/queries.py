@@ -98,21 +98,12 @@ def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     unconditional widen measurably hurts them (extra shuffle + lost scan
     pipelining: join_agg_revenue 0.59→1.22s). Results are unaffected:
     ordering/sampling in every registered query is value-deterministic,
-    which the DuckDB oracle already requires. Same rationale as
-    plans.pipeline._widen_input; no-op on multi-file cluster tables.
+    which the DuckDB oracle already requires. The widening is
+    plans.pipeline._widen_input's; a no-op on multi-file cluster tables.
     """
-    from entity_linking_spark.plans.pipeline import estimated_scan_width
+    from entity_linking_spark.plans.pipeline import _widen_input
 
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    n_par = spark.sparkContext.defaultParallelism
-    # split-math + row-group estimate, not raw file count: a large
-    # multi-row-group file already scans wide and must not pay a shuffle
-    # (round-4 advice); not rdd.getNumPartitions() either — the RDD
-    # conversion costs ~1.9s of cold driver time (plans.pipeline)
-    width = estimated_scan_width(df)
-    if width is not None and width < n_par:
-        return df.repartition(n_par)
-    return df
+    return _widen_input(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,11 @@ are chosen for the 100 TB design point: AQE on (runtime re-plan + skew-join
 splitting), Arrow-batched pandas UDFs, UTC session timezone so results are
 comparable across engines, and shuffle partitions sized to the parallelism
 actually available rather than the historic 200 default.
+
+The generated-code cache is sized so one session compiles each
+whole-stage class once (``spark.sql.codegen.cache.maxEntries``, see
+``get_spark``): at Spark's default of 100 entries every ``link_pages``
+run recompiled ~220 classes, even in a long-lived session.
 """
 
 from __future__ import annotations
@@ -61,6 +66,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the codegen cache is an LRU keyed by (class loader, code), and in
+        # local mode each whole-stage class is compiled under both the
+        # driver's and the executor's loader. One link_pages run needs
+        # ~110-150 distinct bodies, i.e. ~220-300 entries, so at the
+        # default 100 every lookup missed: each repeat run over the same
+        # input recompiled (and re-JITted) 217-249 classes, and a whole
+        # perfbench process creates ~276 entries. 1000 leaves headroom;
+        # a repeat run now compiles 0-30.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

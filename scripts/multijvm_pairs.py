@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -62,8 +63,7 @@ def main() -> None:
         effs.append(eff)
         print(f"pair {i + 1}: {a['seconds']}s -> {b['seconds']}s  "
               f"eff={eff}", flush=True)
-    effs_sorted = sorted(effs)
-    median = effs_sorted[len(effs_sorted) // 2]
+    median = statistics.median(effs)
     summary = {"pairs": effs, "median": median, "cores": cores, "reps": reps}
     with open(OUT, "a") as fh:
         fh.write(json.dumps({"summary": summary}) + "\n")

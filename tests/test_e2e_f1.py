@@ -50,3 +50,17 @@ def test_cluster_id_is_min_member(corpus):
         by_comp.setdefault(r["cluster_id"], []).append(r["id"])
     for cid, members in by_comp.items():
         assert cid == min(members)
+
+
+def test_repeat_run_reuses_generated_code(spark, corpus):
+    # the session's codegen cache holds every class one run generates,
+    # so a second run over the same input compiles (almost) nothing; at
+    # Spark's default 100-entry cache it recompiled ~200+ classes
+    pages, _ = corpus
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+    link_pages(pages, config=LinkageConfig()).collect()
+    spark.catalog.clearCache()
+    before = compiled.getCount()
+    link_pages(pages, config=LinkageConfig()).collect()
+    assert compiled.getCount() - before <= 25

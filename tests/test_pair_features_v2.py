@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 from entity_linking_spark.datagen import write_parquet
 from entity_linking_spark.functions.text import words
 from entity_linking_spark.operators.pairs import candidate_pairs
-from entity_linking_spark.operators.scoring import doc_payload, pair_features
+from entity_linking_spark.operators.scoring import (
+    doc_payload,
+    pair_features,
+    pair_payload_half,
+)
 from entity_linking_spark.plans.pipeline import (
     LinkageConfig,
     link_pages,
@@ -128,6 +132,25 @@ def test_pair_emb_features_match_numpy(spark, tiny):
     assert rows[(1, 3)]["emb_cos"] == pytest.approx(0.0)
     # no emb_* payload residue in the output schema
     assert "emb_a" not in rows[(1, 2)].asDict()
+
+
+def test_pair_emb_half_stage_mismatch_raises(spark, tiny):
+    # a pairs_payload_a stage built with embeddings, resumed against a
+    # payload without them (and the reverse), fails with a clear error
+    # instead of an unresolved-column error
+    pages, emb = tiny
+    with_emb = doc_payload(pages, id_col="id", embeddings=emb, emb_dim=2)
+    plain = doc_payload(pages, id_col="id")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    for half, payload in (
+        (pair_payload_half(pairs, with_emb), plain),
+        (pair_payload_half(pairs, plain), with_emb),
+    ):
+        with pytest.raises(ValueError, match="emb_dim"):
+            pair_features(half, payload)
+    # matching halves still score
+    half = pair_payload_half(pairs, with_emb)
+    assert "emb_cos" in pair_features(half, with_emb).columns
 
 
 def test_candidate_pairs_with_count_and_prior(spark):

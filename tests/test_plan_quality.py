@@ -145,3 +145,24 @@ def test_widen_input_scan_width_estimate(spark, tmp_path):
     mem = spark.createDataFrame([(1, "a")], "id long, text string")
     assert estimated_scan_width(mem) is None
     assert _widen_input(mem) is mem  # no needless full-frame shuffle
+
+
+def test_widen_input_falls_back_to_file_count(spark, tmp_path, monkeypatch):
+    # where the scan-width estimate is unavailable (remote store) a
+    # file-backed frame with fewer files than cores is still widened
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from entity_linking_spark.plans import pipeline
+    from entity_linking_spark.queries import _tw
+
+    monkeypatch.setattr(pipeline, "estimated_scan_width", lambda df: None)
+    n_par = spark.sparkContext.defaultParallelism
+    assert n_par > 1
+    pq.write_table(
+        pa.table({"id": [1, 2, 3], "text": ["a", "b", "c"]}),
+        str(tmp_path / "one.parquet"),
+    )
+    one = spark.read.parquet(str(tmp_path / "one.parquet"))
+    assert pipeline._widen_input(one).rdd.getNumPartitions() == n_par
+    assert _tw(spark, str(tmp_path), "one").rdd.getNumPartitions() == n_par
