@@ -45,6 +45,14 @@ def pipeline_query(spark, sf_dir: str):
     )
 
 
+def _release_cached(spark) -> None:
+    """Drop every cached frame and persisted RDD of the session
+    (``localCheckpoint`` RDDs survive ``clearCache``)."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
 BENCH_REGISTRY_QUERIES = [
     "minhash_signature",
     "candidate_pairs_pfx",
@@ -79,6 +87,9 @@ def main() -> None:
     t0 = time.time()
     pipeline_query(spark, sf_dir).count()
     flagship_cold_sec = round(time.time() - t0, 3)
+    # the steady run builds the same plans: start it from no cached frames,
+    # or it reads the cold run's cached pages, blocks and payload
+    _release_cached(spark)
 
     timings: dict[str, float] = {}
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
@@ -106,7 +117,6 @@ def main() -> None:
         # cold = first flagship run in the JVM (r3-comparable protocol);
         # it doubles as the JIT warmup for the steady-state timings above
         "flagship_cold_sec": flagship_cold_sec,
-        "warmup_sec": flagship_cold_sec,
     }
     print(json.dumps(out))
 

@@ -418,7 +418,11 @@ def run_linkage_checkpointed(
         "clusters",
         lambda: pages.select(F.col(id_col).alias("id"))
         .join(
-            connected_components(edges),
+            connected_components(
+                edges,
+                checkpoint_dir=cfg.cc_checkpoint_dir,
+                fuse_rounds=cfg.cc_fuse_rounds,
+            ),
             F.col("id") == F.col("node"),
             "left",
         )

@@ -2,9 +2,11 @@
 
 Large-star / small-star alternation (Kiveris et al., "Connected Components
 in MapReduce and Beyond", SOCC'14 — public algorithm), implemented as
-iterated DataFrame self-joins with per-iteration ``localCheckpoint`` to
-truncate lineage. Converges in O(log² n) rounds; each round is two
-shuffle-keyed aggregations.
+iterated DataFrame window aggregates with per-iteration ``localCheckpoint``
+to truncate lineage. Converges in O(log² n) rounds; each star is one
+shuffle (a windowed per-node neighbour minimum), and the small star adds a
+``distinct``. The loop stops on the first probe whose edge set is a star
+forest.
 
 Reference analog: the per-document one-round max-product message passing
 (``/root/reference/src/max_product.py:60-82``) enforces cross-mention
@@ -20,42 +22,72 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _nbr_min() -> F.Column:
+    """Minimum ``dst`` over the ``src`` node's edges: one exchange on
+    ``src`` and a sort, where ``groupBy`` + join back would shuffle twice."""
+    return F.min("dst").over(Window.partitionBy("src"))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to the min of
-    N(u) ∪ {u}."""
+    N(u) ∪ {u}. Output is oriented high→low and may hold duplicates (the
+    following small star removes them)."""
     bidir = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    nbr_min = bidir.groupBy("src").agg(F.min("dst").alias("min_nbr"))
-    m = bidir.join(nbr_min, "src").select(
-        "src",
-        "dst",
-        F.least(F.col("src"), F.col("min_nbr")).alias("m"),
+    m = bidir.select(
+        "src", "dst", F.least(F.col("src"), _nbr_min()).alias("m")
     )
-    return (
-        m.where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
+    # m ≤ src < dst, so no output edge is a self-loop
+    return m.where(F.col("dst") > F.col("src")).select(
+        F.col("dst").alias("src"), F.col("m").alias("dst")
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Orient edges high→low; for each node u connect all of its ≤ neighbors
-    (and u) to the minimum neighbor."""
+    (and u) to the minimum neighbor m. Each oriented edge (u, v) yields
+    exactly one output edge: (v, m), or (u, m) when v is m itself."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+    ).select("src", "dst", _nbr_min().alias("m"))
+    return oriented.select(
+        F.when(F.col("dst") == F.col("m"), F.col("src"))
+        .otherwise(F.col("dst"))
+        .alias("src"),
+        F.col("m").alias("dst"),
     ).distinct()
-    nbr_min = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    joined = oriented.join(nbr_min, "src")
-    out = joined.select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    ).union(joined.select(F.col("src"), F.col("m").alias("dst")))
-    return out.where(F.col("src") != F.col("dst")).distinct()
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when every edge, oriented high→low, joins a child to a root:
+    no node is a child twice and no child is also a parent. One
+    ``groupBy`` over the edge set. Duplicate edges can only make this
+    say "not yet" (a repeated child), never accept a non-star."""
+    per_node = (
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(
+                        F.greatest("src", "dst").alias("node"),
+                        F.lit(1).alias("child"),
+                    ),
+                    F.struct(
+                        F.least("src", "dst").alias("node"),
+                        F.lit(0).alias("child"),
+                    ),
+                )
+            )
+        )
+        .groupBy("node")
+        .agg(F.sum("child").alias("child"), F.count("*").alias("degree"))
+    )
+    # a child must have exactly one edge: the one to its root
+    return per_node.where((F.col("child") > 0) & (F.col("degree") > 1)).count() == 0
 
 
 def connected_components(
@@ -68,19 +100,28 @@ def connected_components(
 ) -> DataFrame:
     """→ (node, component) where component = min node id in the component.
 
-    Convergence: the star-contraction fixpoint — iterate until the edge set
-    is unchanged (checked via count + sum-of-hashes). ``fuse_rounds``
-    combined large∘small rounds run per materialization and fixpoint
-    probe (default 2): this divides both the lineage-truncation barriers
-    and the driver round-trips by the fuse factor (the flagship's
-    measured sf0.1 floor was ~42% driver-bound), at the cost of at most
-    ``fuse_rounds − 1`` redundant rounds after the true fixpoint — cheap,
-    because star rounds are idempotent on a converged star forest.
+    Convergence: star rounds preserve connectivity, and a forest of stars
+    whose leaves are all larger than their root is both their fixpoint and
+    the final labelling (root = component minimum). So after each fused
+    probe one ``groupBy`` tests whether the edge set is such a star forest
+    (see ``_is_star_forest``), and the loop stops on the probe that
+    reaches it. ``fuse_rounds`` combined large∘small rounds run per
+    materialization and probe (default 2): this divides both the
+    lineage-truncation barriers and the driver round-trips by the fuse
+    factor (the flagship's measured sf0.1 floor was ~42% driver-bound), at
+    the cost of up to ``fuse_rounds − 1`` rounds past the first star
+    forest — cheap, because star rounds leave a star forest unchanged.
     Measured guidance: fusion clearly wins on multi-core executors
     (same-hour cold flagship 43.0s → 28.5s at local[32]); on 1-core /
     small-heap executors the wider in-flight job showed no benefit in
     noisy measurements — set ``fuse_rounds=1`` there to recover the
     round-3 per-round behavior.
+
+    Skew: each star's neighbour minimum is a window over ``src``, which
+    has no map-side combine, so all of one node's edges meet in one task.
+    A ``groupBy`` + join back could have been split by AQE skew-join
+    handling, but only above its ``skewedPartitionThresholdInBytes``
+    (256 MB by default, about 16M edges on one hub).
 
     ``checkpoint_dir``: by default rounds truncate lineage with
     ``localCheckpoint`` (executor-local blocks — fastest, but a lost
@@ -88,9 +129,10 @@ def connected_components(
     reliable-storage path (HDFS/S3/DBFS) to use ``checkpoint`` with
     ``spark.sparkContext.setCheckpointDir`` instead: each round's edge set
     is persisted to the shared filesystem and survives executor loss.
-    Superseded round checkpoints are deleted as soon as the next probe's
-    edge set is on disk (shared storage holds ~2 edge-set copies, not
-    O(rounds)), and a caller-set checkpoint dir is restored on exit.
+    Superseded rounds are released as soon as the next probe's edge set
+    is materialized: local rounds are unpersisted, reliable ones deleted
+    (shared storage holds ~2 edge-set copies, not O(rounds)). A caller-set
+    checkpoint dir is restored on exit.
     """
     spark = edges.sparkSession
     prior_ckpt_dir = None
@@ -110,35 +152,29 @@ def connected_components(
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
 
-    def _ckpt_file(df: DataFrame) -> str | None:
-        """Reliable-checkpoint path of a materialized checkpointed frame."""
-        try:
-            opt = (
-                df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
-            )
-            return opt.get() if opt.isDefined() else None
-        except Exception:  # pragma: no cover - py4j surface drift
-            return None
+    def _release(dfs: list[DataFrame]) -> None:
+        """Best-effort release of no-longer-referenced round checkpoints.
 
-    def _delete_superseded(dfs: list[DataFrame]) -> None:
-        """Best-effort delete of no-longer-referenced round checkpoints.
-
-        Without this a long run accumulates O(rounds) full copies of the
-        edge set in shared storage (spark.cleaner.referenceTracking.
-        cleanCheckpoints defaults to false and relies on driver GC even
-        when enabled — round-4 advice). Only frames whose consumers have
-        already materialized are passed in; ``raw`` and the final edge
-        set are never superseded (the caller's lazy result reads them).
+        Local rounds are unpersisted (non-blocking); otherwise each stays
+        persisted until the ContextCleaner happens to collect it. Reliable
+        rounds are also deleted from shared storage, where a long run
+        would otherwise accumulate O(rounds) full copies of the edge set
+        (spark.cleaner.referenceTracking.cleanCheckpoints defaults to
+        false and relies on driver GC even when enabled — round-4
+        advice). Only frames whose consumers have already materialized are
+        passed in; ``raw`` and the final edge set are never superseded
+        (the caller's lazy result reads them).
         """
-        if checkpoint_dir is None:
-            return
         for df in dfs:
-            path = _ckpt_file(df)
-            if not path:
-                continue
             try:
-                jvm = spark.sparkContext._jvm
-                hpath = jvm.org.apache.hadoop.fs.Path(path)
+                rdd = df._jdf.queryExecution().analyzed().rdd()
+                rdd.unpersist(False)
+                if checkpoint_dir is None:
+                    continue
+                opt = rdd.getCheckpointFile()
+                if not opt.isDefined():
+                    continue
+                hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(opt.get())
                 fs = hpath.getFileSystem(
                     spark.sparkContext._jsc.hadoopConfiguration()
                 )
@@ -159,56 +195,32 @@ def connected_components(
     nodes = raw.select(F.col("src").alias("node")).union(
         raw.select(F.col("dst").alias("node"))
     ).distinct()
-    # lazy: materializes together with the first `_sig` aggregate below —
-    # an eager checkpoint here would spend a separate job on a full pass
-    # over the edge set (plan roots at the checkpointed `raw`, so laziness
-    # cannot recompute upstream)
+    # lazy: materializes inside the first probe's job (plan roots at the
+    # checkpointed `raw`, so laziness cannot recompute upstream)
     e = _ckpt(raw.where(F.col("src") != F.col("dst")).distinct(), False)
 
-    def _sig(df: DataFrame) -> tuple[int, int]:
-        row = (
-            df.select(
-                F.greatest("src", "dst").alias("a"), F.least("src", "dst").alias("b")
-            )
-            .agg(
-                F.count("*").alias("n"),
-                # modulo keeps the ANSI-mode sum far from int64 overflow
-                F.coalesce(
-                    F.sum(F.xxhash64("a", "b") % F.lit(1_000_000_007)), F.lit(0)
-                ).alias("s"),
-            )
-            .collect()[0]
-        )
-        return int(row["n"]), int(row["s"])
-
-    prev = _sig(e)
-    # frames whose checkpoints become garbage once the NEXT probe's final
-    # edge set has materialized (the fused loop appends each round's
-    # input, so the initial dedup enters the list at probe 1)
-    superseded: list[DataFrame] = []
     converged = False
     for _ in range(max_iter):
-        # fuse_rounds combined rounds per fixpoint probe, with a LAZY
-        # checkpoint between them: each star substitutes its input
-        # subtree twice, so chaining stars under one plan grows the
-        # logical tree exponentially (4 chained stars ≈ 4^4 leaf copies,
-        # measured ~2.4s of Catalyst analysis per round); the
-        # intermediate lazy checkpoints keep every analyzed plan two
-        # stars deep while still materializing all fused rounds in the
-        # ONE job the single fixpoint aggregate drives — 1/fuse_rounds
-        # the driver collects of the per-round form
+        # fuse_rounds combined rounds per probe, with a LAZY checkpoint
+        # between them: each star substitutes its input subtree twice, so
+        # chaining stars under one plan grows the logical tree
+        # exponentially (4 chained stars ≈ 4^4 leaf copies, measured ~2.4s
+        # of Catalyst analysis per round); the intermediate lazy
+        # checkpoints keep every analyzed plan two stars deep while still
+        # materializing all fused rounds in the ONE job the probe's
+        # aggregate drives — 1/fuse_rounds the driver collects of the
+        # per-round form
+        superseded = []
         for _f in range(max(1, fuse_rounds)):
             superseded.append(e)
             e = _ckpt(_small_star(_large_star(e)), False)
-        cur = _sig(e)
-        # this probe's final edge set is on disk now; everything older
-        # (previous probes + this probe's fused intermediates) is garbage
-        _delete_superseded(superseded)
-        superseded = []
-        if cur == prev:
-            converged = True
+        converged = _is_star_forest(e)
+        # this probe's final edge set is materialized now; its round inputs
+        # (the previous probe's result and the fused intermediates) are
+        # garbage
+        _release(superseded)
+        if converged:
             break
-        prev = cur
     if checkpoint_dir is not None:
         # all checkpoint WRITES are done (the lazy result only READS the
         # final edge set + raw); hand the global setting back
@@ -221,8 +233,8 @@ def connected_components(
             f"connected_components: edge set did not reach a fixpoint within "
             f"max_iter={max_iter} fused probes "
             f"({max(1, fuse_rounds) * max_iter} star "
-            f"rounds); component labels may be unconverged "
-            f"(last signature {prev}). Increase max_iter.",
+            f"rounds); component labels may be unconverged. "
+            f"Increase max_iter.",
             RuntimeWarning,
             stacklevel=2,
         )

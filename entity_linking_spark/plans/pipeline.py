@@ -167,9 +167,11 @@ class LinkageConfig:
     # preemptible clusters where a lost executor must not kill the
     # fixpoint iteration (see operators.cluster.connected_components).
     cc_checkpoint_dir: str | None = None
-    # combined CC rounds per fixpoint probe (driver collect). 2 wins on
-    # multi-core executors (cold flagship 43.0s -> 28.5s same-hour A/B);
-    # set 1 on 1-core/small-heap executors (see connected_components).
+    # combined CC rounds per star-forest probe (one driver collect each;
+    # the loop stops on the first probe that reaches a star forest). 2
+    # wins on multi-core executors (cold flagship 43.0s -> 28.5s same-hour
+    # A/B); set 1 on 1-core/small-heap executors (see
+    # connected_components).
     cc_fuse_rounds: int = 2
     # bigint tfidf map keys (xxhash64 of the token) in the scoring
     # payload — key-identity algebra downstream, ~20% smaller shuffle

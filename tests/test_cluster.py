@@ -6,6 +6,7 @@ the scale paths (chain = transitivity, star = skew, random = convergence)
 per FIXTURES.md §7.
 """
 
+import math
 import random
 
 import pytest
@@ -66,14 +67,96 @@ def test_self_loops_and_dups(spark):
     _check(spark, [(1, 1), (1, 2), (2, 1), (2, 3), (5, 5)])
 
 
-def test_random_graph(spark):
-    rng = random.Random(42)
-    nodes = list(range(300))
+@pytest.mark.parametrize(
+    "seed,n_nodes,n_edges",
+    [(42, 300, 250), (1, 300, 100), (2, 300, 300), (3, 200, 600), (4, 60, 400)],
+)
+def test_random_graph(spark, seed, n_nodes, n_edges):
+    # sparse (many small trees) through dense (one component): the
+    # star-forest stop must agree with the union-find oracle at every density
+    rng = random.Random(seed)
     edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(250)
+        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
     ]
-    edges = [(a, b) for a, b in edges if a != b]
+    _check(spark, [(a, b) for a, b in edges if a != b])
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(5, 1), (5, 2)],  # a leaf with two roots
+        [(10, 1), (10, 2), (10, 3)],  # a hub larger than its leaves
+    ],
+    ids=["leaf_two_roots", "hub_above_leaves"],
+)
+def test_near_stars_not_accepted(spark, edges):
+    from entity_linking_spark.operators.cluster import _is_star_forest
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    assert not _is_star_forest(df)
     _check(spark, edges)
+
+
+def test_star_forest_accepted(spark):
+    from entity_linking_spark.operators.cluster import _is_star_forest
+
+    # either orientation of a child → root edge is accepted
+    edges = [(5, 1), (1, 7), (9, 2), (3, 2)]
+    assert _is_star_forest(spark.createDataFrame(edges, "src long, dst long"))
+
+
+def _count_rounds(spark, monkeypatch, edges):
+    from entity_linking_spark.operators import cluster
+
+    calls = {"n": 0}
+    small_star = cluster._small_star
+
+    def counting(e):
+        calls["n"] += 1
+        return small_star(e)
+
+    monkeypatch.setattr(cluster, "_small_star", counting)
+    _check(spark, edges, fuse_rounds=1)
+    return calls["n"]
+
+
+def test_path_converges_in_one_round(spark, monkeypatch):
+    # one star round turns 0-1-2 into the star {1→0, 2→0}; the loop must
+    # stop on that probe instead of running another to confirm it
+    assert _count_rounds(spark, monkeypatch, [(0, 1), (1, 2)]) == 1
+
+
+@pytest.mark.parametrize("n", [512, 2048])
+@pytest.mark.parametrize("shuffled", [False, True])
+def test_chain_rounds_logarithmic(spark, monkeypatch, n, shuffled):
+    # a chain is the worst case for diameter: the star rounds must still
+    # contract it in O(log n), with no confirming round after the fixpoint
+    ids = list(range(n))
+    if shuffled:
+        random.Random(n).shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    rounds = _count_rounds(spark, monkeypatch, edges)
+    assert rounds <= math.ceil(math.log2(n)) + 1, rounds
+
+
+def test_superseded_rounds_released(spark):
+    # only raw and the final edge set stay persisted (the lazy result reads
+    # them): the persisted-RDD count a call leaves must not grow with the
+    # number of rounds (counted by id: the ContextCleaner may drop older
+    # frames meanwhile)
+    jsc = spark.sparkContext._jsc
+
+    def delta(n):
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+        )
+        before = set(jsc.getPersistentRDDs().keys())
+        out = connected_components(df)
+        after = set(jsc.getPersistentRDDs().keys())
+        assert out.count() == n
+        return len(after - before)
+
+    assert delta(2048) == delta(3)
 
 
 def test_singleton_nodes_kept(spark):

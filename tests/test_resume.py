@@ -85,6 +85,40 @@ def test_checkpointed_matches_direct(spark, corpus, tmp_path):
     assert direct == ck
 
 
+def test_checkpointed_honours_cc_config(spark, corpus, tmp_path, monkeypatch):
+    # the checkpointed runner passes the CC knobs through to
+    # connected_components, and fusing one round per probe is a pure
+    # performance choice: the clusters equal the default config's
+    import dataclasses
+
+    from entity_linking_spark.operators import cluster
+
+    seen = []
+    cc = cluster.connected_components
+
+    def spy(edges, **kwargs):
+        seen.append(kwargs)
+        return cc(edges, **kwargs)
+
+    monkeypatch.setattr(cluster, "connected_components", spy)
+
+    def clusters(cfg, run):
+        return sorted(
+            (r["id"], r["cluster_id"])
+            for r in run_linkage_checkpointed(
+                spark, corpus, str(tmp_path / run), cfg
+            ).collect()
+        )
+
+    default = LinkageConfig()
+    one = dataclasses.replace(
+        default, cc_fuse_rounds=1, cc_checkpoint_dir=str(tmp_path / "cc")
+    )
+    assert clusters(one, "fuse1") == clusters(default, "fuse2")
+    assert seen[0] == {"checkpoint_dir": str(tmp_path / "cc"), "fuse_rounds": 1}
+    assert seen[1] == {"checkpoint_dir": None, "fuse_rounds": 2}
+
+
 def test_digest_mismatch_forces_rebuild(spark, corpus, tmp_path):
     """Changed config params must invalidate stages built under the old
     config — stage reuse is keyed on (name, config digest), not name alone."""
