@@ -20,19 +20,13 @@ from entity_linking_spark import queries as Q
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: cluster near-duplicate documents at sf0.001.
 
-    Full pipeline per SURVEY.md §7.1: multi-scheme blocking (host /
+    ``link_pages`` (SURVEY.md §7.1): multi-scheme blocking (host /
     normalized-prefix / MinHash-LSH band keys) → salted + capped blocks →
     block self-join → JVM+Arrow pair scoring → threshold → large-star/
-    small-star connected components. Returns (id, component, url).
+    small-star connected components. Returns (id, cluster_id, url): one
+    row per document, cluster_id = the cluster's minimum member id.
     """
-    from entity_linking_spark.operators.blocking import (
-        block_keys,
-        cap_block_size,
-        salt_mega_blocks,
-    )
-    from entity_linking_spark.operators.cluster import cluster_pages
-    from entity_linking_spark.operators.pairs import candidate_pairs
-    from entity_linking_spark.operators.scoring import doc_payload, score_pairs
+    from entity_linking_spark.plans.pipeline import LinkageConfig, link_pages
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     pages = docs.select(
@@ -44,18 +38,10 @@ def entry(spark: SparkSession) -> DataFrame:
         ).alias("url"),
         F.col("doc_id").alias("id"),
         "text",
-        "lang",
     )
-    blocks = block_keys(pages, id_col="id", text_col="text", url_col="url")
-    blocks = cap_block_size(salt_mega_blocks(blocks, max_block=64), max_block=64)
-    pairs = candidate_pairs(blocks)
-    payload = doc_payload(pages, id_col="id", text_col="text")
-    scored = score_pairs(pairs, payload)
-    clusters = cluster_pages(scored, threshold=0.8)
-    return clusters.join(
-        pages.select(F.col("id").alias("node"), "url"), "node"
-    ).select(
-        F.col("node").alias("id"), F.col("component").alias("cluster_id"), "url"
+    clusters = link_pages(pages, id_col="id", config=LinkageConfig(threshold=0.8))
+    return clusters.join(pages.select("id", "url"), "id").select(
+        "id", "cluster_id", "url"
     )
 
 

@@ -150,9 +150,9 @@ class StageCheckpointer:
         The scan of a bucketed table reports ``hashpartitioning`` on the
         bucket columns, so a downstream equi-join on those columns needs
         NO exchange on this side — the measured deployment lever from the
-        bucketed A/B (``scripts/bucketed_payload_ab.py``: scheduled
-        hash-exchanges 2→1 on the scored stage; at 100 TB the payload
-        join ships TBs per removed exchange). Files live under the same
+        bucketed A/B (BENCH/BASELINE.md: scheduled hash-exchanges 2→1 on
+        the scored stage; at 100 TB the payload join ships TBs per
+        removed exchange). Files live under the same
         ``stage_<name>`` path as plain stages (``saveAsTable`` with an
         explicit LOCATION); the bucket spec is recorded in the manifest
         so a NEW session resuming this run_dir re-registers the external
@@ -291,44 +291,45 @@ def run_linkage_checkpointed(
 ) -> DataFrame:
     """The flagship pipeline with every stage checkpointed + resumable.
 
-    Killing the job after any stage and re-running reuses all completed
-    stages (tests/test_resume.py proves byte-identical output either way).
+    The stage graph is ``link_pages``' own (``plans.pipeline``): the same
+    input widening, the same int64/128-bit working-id fold and the same
+    id restore, so the clusters equal ``link_pages``' for one config
+    (tests/test_resume.py). Only the materialization differs: ``blocks``
+    is written repartitioned by ``block_key``, and ``pairs``,
+    ``payload``, ``scored`` and ``clusters`` as checkpoints. Killing the
+    job after any stage and re-running reuses all completed stages
+    (tests/test_resume.py proves identical output either way). Stages
+    carry working ids; a run_dir written before the fold (string-id
+    stages) has a different digest and rebuilds.
 
     ``bucketed`` (default True): write the ``pairs`` stage bucketed on
-    ``id_a`` and the ``payload`` stage bucketed on ``id`` — the layout
-    the bucketed A/B validated (scheduled hash-exchanges 2→1 in the
-    scored stage; the removed exchange ships the full payload at scale).
-    Set False for plain-parquet stages (portable to engines that cannot
-    read Spark bucket metadata).
+    ``id_a`` and the ``payload`` stage bucketed on ``id`` — scheduled
+    hash-exchanges 2→1 in the scored stage; the removed exchange ships
+    the full payload at scale (BENCH/BASELINE.md). Set False for
+    plain-parquet stages (portable to engines that cannot read Spark
+    bucket metadata).
 
     ``dual_bucket`` (requires ``bucketed``): additionally persist a
     ``pairs_payload_a`` stage — pairs with prior features + the id_a-side
     payload attached — bucketed on ``id_b``. Building it is exchange-free
     (pairs bucketed id_a ⋈ payload bucketed id), its WRITE performs the
     id_b re-key once, and the scored stage then schedules ZERO exchanges
-    (round-4 verdict task 5; single-bucket stops at 1). Same cold-run
-    data movement, but the re-key becomes a compressed resumable stage
-    instead of a transient shuffle, and a resumed run re-enters scoring
-    with no exchange at all.
+    (single-bucket stops at 1). Same cold-run data movement, but the
+    re-key becomes a compressed resumable stage instead of a transient
+    shuffle, and a resumed run re-enters scoring with no exchange at all.
 
     Config knobs that change a persisted stage's SCHEMA are honored and
-    digest-covered here (round-4 advice): ``cfg.hash_tokens`` (payload
-    tfidf map<bigint,…> vs map<string,…>), ``cfg.prior_features`` (pairs
-    carry n_shared), ``cfg.emb_dim`` + ``embeddings`` (payload carries a
-    pooled ``emb`` vector). The embeddings TABLE itself is not digested —
-    keep it stable for the lifetime of a run_dir (or change run_dir when
-    it changes).
+    digest-covered here: ``cfg.hash_tokens`` (payload tfidf
+    map<bigint,…> vs map<string,…>), ``cfg.prior_features`` (pairs
+    carry n_shared), ``cfg.id_bits`` (bigint vs struct ids),
+    ``cfg.emb_dim`` + ``embeddings`` (payload carries a pooled ``emb``
+    vector). The embeddings TABLE itself is not digested — keep it stable
+    for the lifetime of a run_dir (or change run_dir when it changes).
     """
-    from entity_linking_spark.operators.blocking import (
-        block_keys,
-        cap_block_size,
-        salt_mega_blocks,
-    )
-    from entity_linking_spark.operators.cluster import connected_components
-    from entity_linking_spark.operators.pairs import candidate_pairs
-    from entity_linking_spark.operators.scoring import doc_payload, score_pairs
-    from entity_linking_spark.plans.pipeline import LinkageConfig
+    from entity_linking_spark.plans.pipeline import LinkageConfig, _run_stages
 
+    if dual_bucket and not bucketed:
+        raise ValueError("dual_bucket requires bucketed=True")
     cfg = config or LinkageConfig()
     ckpt = StageCheckpointer(spark, run_dir)
     # one digest for the whole run config: any param change (blocking,
@@ -340,93 +341,28 @@ def run_linkage_checkpointed(
             "id_col": id_col,
             "text_col": text_col,
             "url_col": url_col,
-            "pipeline_version": 3,
+            "pipeline_version": 4,
             # layout change invalidates stages written the other way
             "bucketed": bucketed,
             "dual_bucket": dual_bucket,
         }
     )
-    if dual_bucket and not bucketed:
-        raise ValueError("dual_bucket requires bucketed=True")
+    buckets = (
+        {"pairs": "id_a", "payload": "id", "pairs_payload_a": "id_b"}
+        if bucketed else {}
+    )
 
-    blocks = ckpt.stage(
-        "blocks",
-        lambda: cap_block_size(
-            salt_mega_blocks(
-                block_keys(
-                    pages,
-                    id_col=id_col,
-                    text_col=text_col,
-                    url_col=url_col,
-                    num_hashes=cfg.num_hashes,
-                    bands=cfg.bands,
-                    shingle_k=cfg.shingle_k,
-                    prefix_tokens=cfg.prefix_tokens,
-                    hash_keys=cfg.hash_block_keys,
-                ),
-                max_block=cfg.max_block,
-                n_salts=cfg.n_salts,
-            ),
-            max_block=cfg.max_block,
-        ),
-        repartition_by="block_key",
-        digest=dig,
-    )
-    build_pairs = lambda: candidate_pairs(  # noqa: E731
-        blocks, with_count=cfg.prior_features
-    )
-    build_payload = lambda: doc_payload(  # noqa: E731
-        pages,
-        id_col=id_col,
-        text_col=text_col,
-        topk=cfg.payload_topk,
-        hash_tokens=cfg.hash_tokens,
-        embeddings=embeddings,
-        emb_dim=cfg.emb_dim if embeddings is not None else 0,
-    )
-    if bucketed:
-        pairs = ckpt.bucketed_stage(
-            "pairs", build_pairs, bucket_by="id_a", digest=dig
-        )
-        payload = ckpt.bucketed_stage(
-            "payload", build_payload, bucket_by="id", digest=dig
-        )
-    else:
-        pairs = ckpt.stage("pairs", build_pairs, digest=dig)
-        payload = ckpt.stage("payload", build_payload, digest=dig)
-    if dual_bucket:
-        from entity_linking_spark.operators.scoring import pair_payload_half
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if name == "pages":
+            return build()  # the input itself: re-read on resume
+        if name in buckets:
+            return ckpt.bucketed_stage(
+                name, build, bucket_by=buckets[name], digest=dig
+            )
+        by = "block_key" if name == "blocks" else None
+        return ckpt.stage(name, build, repartition_by=by, digest=dig)
 
-        raw_pairs = pairs
-        pairs = ckpt.bucketed_stage(
-            "pairs_payload_a",
-            lambda: pair_payload_half(raw_pairs, payload),
-            bucket_by="id_b",
-            digest=dig,
-        )
-    scored = ckpt.stage(
-        "scored",
-        lambda: score_pairs(
-            pairs, payload, weights=cfg.weights, model=cfg.model
-        ),
-        digest=dig,
+    return _run_stages(
+        pages, stage, cfg, id_col, text_col, url_col,
+        embeddings=embeddings, dual_bucket=dual_bucket,
     )
-    edges = scored.where(F.col("score") >= cfg.edge_threshold).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    clusters = ckpt.stage(
-        "clusters",
-        lambda: pages.select(F.col(id_col).alias("id"))
-        .join(
-            connected_components(
-                edges,
-                checkpoint_dir=cfg.cc_checkpoint_dir,
-                fuse_rounds=cfg.cc_fuse_rounds,
-            ),
-            F.col("id") == F.col("node"),
-            "left",
-        )
-        .select("id", F.coalesce("component", F.col("id")).alias("cluster_id")),
-        digest=dig,
-    )
-    return clusters

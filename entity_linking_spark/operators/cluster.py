@@ -250,21 +250,3 @@ def connected_components(
         )
     )
 
-
-def cluster_pages(
-    scored_pairs: DataFrame,
-    threshold: float,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    score: str = "score",
-) -> DataFrame:
-    """Threshold scored pairs into edges and resolve clusters.
-
-    Reference analog: per-mention argmax over candidate scores
-    (``/root/reference/src/inference.py:26``) followed by the collective
-    consistency pass; here: edge filter + transitive closure.
-    """
-    edges = scored_pairs.where(F.col(score) >= threshold).select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    return connected_components(edges)

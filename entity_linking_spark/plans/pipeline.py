@@ -1,17 +1,24 @@
 """The flagship linkage pipeline: pages → clusters (+ pairwise evaluation).
 
-Stage graph (SURVEY.md §7.1, each stage checkpointable via
-``entity_linking_spark.checkpoint``):
+One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
 
-    pages(url, warc_ts, html, text, lang)
-      extract  → text (byte-identical contract, extract.py)
-      block    → (id, block_key): host ∪ norm-prefix ∪ MinHash-LSH bands
-      salt/cap → mega-block salting + deterministic size caps
-      pairs    → block self-join, id_a < id_b, dedup
-      score    → JVM+Arrow pair features ▷ fixed-weight linear score
-      edges    → score ≥ τ
-      cluster  → large-star/small-star connected components
-      metrics  → pairwise P/R/F1 vs labeled_pairs
+    pages     → input pruned to id/text/url, widened when it scans narrow
+    (id fold) → working ids: xxhash64 (or 128-bit) of the input id
+    blocks    → (id, block_key): host ∪ norm-prefix ∪ MinHash-LSH bands,
+                mega-block salting + deterministic size caps
+    pairs     → block self-join, id_a < id_b, dedup
+    payload   → per-page TF-IDF / head / token-count (/ embedding) row
+    [pairs_payload_a] → pairs with the id_a-side payload attached
+    scored    → JVM+Arrow pair features ▷ linear / learned score
+    clusters  → edges (score ≥ τ) → large-star/small-star connected
+                components → id restore (cluster_id = min member id)
+
+Every runner is the same graph with its own materialization callback:
+``link_pages`` persists ``pages``, ``blocks`` and ``payload`` in memory;
+``checkpoint.run_linkage_checkpointed`` writes each stage to a resumable
+checkpoint; ``score_candidate_pairs`` materializes nothing and stops
+after ``scored``. ``pairwise_metrics`` scores clusters against labeled
+pairs.
 
 Reference lineage: the stages mirror the reference's candidate-generation →
 feature-scoring → argmax/collective-consistency flow
@@ -21,9 +28,10 @@ src/max_product.py:60-82) re-expressed as DataFrame transformations.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_linking_spark.operators.blocking import (
@@ -38,6 +46,7 @@ from entity_linking_spark.operators.scoring import (
     GBTScorer,
     TrainedScorer,
     doc_payload,
+    pair_payload_half,
     score_pairs,
 )
 
@@ -196,6 +205,9 @@ class LinkageConfig:
     # 128: two-seed xxhash64 struct ids through blocking/pairs/CC —
     # birthday-safe at the north star's 10^12 docs (~10^-15 expected
     # collisions). Integral inputs skip hashing entirely either way.
+    # Caps keep block members in working-id order, so 64 and 128 give
+    # identical clusters only while caps do not bite (the test_resume
+    # fixture at max_block=3: 27 vs 26 clusters).
     id_bits: int = 64
     weights: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
     # learned scorer — linear (TrainedScorer) or tree-ensemble (GBTScorer);
@@ -206,6 +218,145 @@ class LinkageConfig:
     @property
     def edge_threshold(self) -> float:
         return self.model.threshold if self.model is not None else self.threshold
+
+
+def _working_id(pages: DataFrame, id_col: str, cfg: LinkageConfig) -> tuple[Column, bool]:
+    """The pipeline-interior id for ``id_col`` → (column, ids_integral).
+
+    The id rides every hot shuffle (blocking, both sides of the pair
+    join, both payload joins, every CC round), and input ids are
+    typically ~40-byte URLs: xxhash64 folds them to 8 bytes (collisions
+    ~n²/2^65, ≈3 silent merges at 10^10 docs); ``cfg.id_bits=128`` uses a
+    two-seed xxhash64 struct, birthday-safe at 10^12 docs. Caps keep
+    block members in working-id order, so the width changes the clusters
+    once caps bite. Integral ids are used as they are (order-preserving,
+    collision-free), which lets the id restore skip the representative
+    join (min working id == min id).
+    """
+    from pyspark.sql.types import IntegralType
+
+    if isinstance(pages.schema[id_col].dataType, IntegralType):
+        return F.col(id_col).cast("bigint"), True
+    if cfg.id_bits >= 128:
+        return F.struct(
+            F.xxhash64(F.col(id_col)).alias("h1"),
+            F.xxhash64(F.col(id_col), F.lit(1)).alias("h2"),
+        ), False
+    return F.xxhash64(F.col(id_col)), False
+
+
+def _run_stages(
+    pages: DataFrame,
+    stage: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    cfg: LinkageConfig,
+    id_col: str,
+    text_col: str,
+    url_col: str | None,
+    embeddings: DataFrame | None = None,
+    dual_bucket: bool = False,
+    scored_only: bool = False,
+) -> DataFrame:
+    """The one definition of the stage graph (see the module docstring).
+
+    Each stage is built as ``stage(name, build)``, where ``build()``
+    returns the stage's frame from the stages before it; the callback
+    decides how the stage materializes (persist, checkpoint, or not at
+    all) and returns the frame the later stages read. Names in order:
+    ``pages``, ``blocks``, ``pairs``, ``payload``, ``pairs_payload_a``
+    (only with ``dual_bucket``), ``scored``, ``clusters``.
+
+    → (id, cluster_id) over the input ids; with ``scored_only`` the graph
+    stops after ``scored`` and returns the scored pairs over input ids.
+    """
+    # prune to what the pipeline reads BEFORE widening/persisting — the
+    # input may carry heavy columns (html binary) that would otherwise be
+    # shuffled and cached for nothing
+    src = pages.select(*[c for c in {id_col, text_col, url_col} if c])
+    pages = stage("pages", lambda: _widen_input(src))
+    nid, ids_integral = _working_id(pages, id_col, cfg)
+    work = pages.withColumn("_nid", nid)
+    blocks = stage(
+        "blocks",
+        lambda: cap_block_size(
+            salt_mega_blocks(
+                block_keys(
+                    work,
+                    id_col="_nid",
+                    text_col=text_col,
+                    url_col=url_col,
+                    num_hashes=cfg.num_hashes,
+                    bands=cfg.bands,
+                    shingle_k=cfg.shingle_k,
+                    prefix_tokens=cfg.prefix_tokens,
+                    hash_keys=cfg.hash_block_keys,
+                ),
+                max_block=cfg.max_block,
+                n_salts=cfg.n_salts,
+            ),
+            max_block=cfg.max_block,
+        ),
+    )
+    pairs = stage(
+        "pairs", lambda: candidate_pairs(blocks, with_count=cfg.prior_features)
+    )
+    payload = stage(
+        "payload",
+        lambda: doc_payload(
+            work,
+            id_col="_nid",
+            text_col=text_col,
+            topk=cfg.payload_topk,
+            hash_tokens=cfg.hash_tokens,
+            embeddings=embeddings,
+            emb_dim=cfg.emb_dim if embeddings is not None else 0,
+        ),
+    )
+    if dual_bucket:
+        raw_pairs = pairs
+        pairs = stage(
+            "pairs_payload_a", lambda: pair_payload_half(raw_pairs, payload)
+        )
+    scored = stage(
+        "scored",
+        lambda: score_pairs(pairs, payload, weights=cfg.weights, model=cfg.model),
+    )
+    ids = pages.select(F.col(id_col).alias("id"), nid.alias("_nid"))
+    if scored_only:
+        a = ids.select(F.col("_nid").alias("id_a"), F.col("id").alias("_a"))
+        b = ids.select(F.col("_nid").alias("id_b"), F.col("id").alias("_b"))
+        rest = [c for c in scored.columns if c not in ("id_a", "id_b")]
+        return scored.join(a, "id_a").join(b, "id_b").select(
+            F.least("_a", "_b").alias("id_a"),
+            F.greatest("_a", "_b").alias("id_b"),
+            *rest,
+        )
+    edges = scored.where(F.col("score") >= cfg.edge_threshold).select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    )
+
+    def clusters() -> DataFrame:
+        comp = connected_components(
+            edges,
+            checkpoint_dir=cfg.cc_checkpoint_dir,
+            fuse_rounds=cfg.cc_fuse_rounds,
+        )
+        if ids_integral:
+            # _nid == id: component (min _nid) IS the min member id already
+            id_t = pages.schema[id_col].dataType.simpleString()
+            return ids.join(comp, ids._nid == comp.node, "left").select(
+                "id",
+                F.coalesce("component", F.col("_nid")).cast(id_t).alias("cluster_id"),
+            )
+        # map hashed components back to original ids and restore the
+        # documented representative (cluster_id = min member id): two
+        # end-stage shuffles over (id, component) — one narrow row per page
+        labeled = ids.join(comp, ids._nid == comp.node, "left").select(
+            "id", F.coalesce("component", F.col("_nid")).alias("_comp")
+        )
+        reps = labeled.groupBy("_comp").agg(F.min("id").alias("cluster_id"))
+        return labeled.join(reps, "_comp").select("id", "cluster_id")
+
+    return stage("clusters", clusters)
 
 
 def link_pages(
@@ -228,95 +379,19 @@ def link_pages(
     ``operators.scoring.doc_payload``). Passed as an argument, not on the
     config, so LinkageConfig stays a digestible value object.
     """
-    cfg = config or LinkageConfig()
-    # prune to what the pipeline reads BEFORE widening/persisting — the
-    # input may carry heavy columns (html binary) that would otherwise be
-    # shuffled and cached for nothing
-    keep = [c for c in {id_col, text_col, url_col} if c]
-    pages = _widen_input(pages.select(*keep)).persist()
-    # int64 working ids (round-4 scaling fix): the id rides EVERY hot
-    # shuffle — the blocking long table, both sides of the pair
-    # self-join, both payload joins, and every CC round — and input ids
-    # are typically ~40-byte URLs. xxhash64 folds them to 8 bytes for
-    # the whole pipeline interior; original ids (and the documented
-    # "cluster_id = min member id" representative) are restored by two
-    # tiny end-stage joins over one row per page. Id collisions at 64
-    # bits are ~n^2/2^65 (≈3 expected silent merges at 10^10 docs);
-    # ``config.id_bits=128`` switches to a two-seed xxhash64 struct —
-    # 16 bytes, birthday-safe at the north star's 10^12 docs — which
-    # flows through blocking/pairs/CC unchanged (struct ids group, join,
-    # compare and hash natively; tests/test_pair_features_v2.py::
-    # test_id_bits_128_parity proves 64- and 128-bit runs produce
-    # identical clusters).
-    # Already-integral ids ARE 8 bytes: use them directly (order-
-    # preserving, collision-free) and skip both the hash and the
-    # end-stage representative restore (min _nid == min id).
-    from pyspark.sql.types import IntegralType
 
-    ids_integral = isinstance(pages.schema[id_col].dataType, IntegralType)
-    if ids_integral:
-        nid = F.col(id_col).cast("bigint")
-    elif cfg.id_bits >= 128:
-        nid = F.struct(
-            F.xxhash64(F.col(id_col)).alias("h1"),
-            F.xxhash64(F.col(id_col), F.lit(1)).alias("h2"),
-        )
-    else:
-        nid = F.xxhash64(F.col(id_col))
-    work = pages.withColumn("_nid", nid)
-    blocks = salt_mega_blocks(
-        block_keys(
-            work,
-            id_col="_nid",
-            text_col=text_col,
-            url_col=url_col,
-            num_hashes=cfg.num_hashes,
-            bands=cfg.bands,
-            shingle_k=cfg.shingle_k,
-            prefix_tokens=cfg.prefix_tokens,
-            hash_keys=cfg.hash_block_keys,
-        ),
-        max_block=cfg.max_block,
-        n_salts=cfg.n_salts,
-    )
-    # persist again post-cap: the pair self-join consumes it from both
-    # sides (the two exchanges differ by projection, so AQE cannot reuse)
-    blocks = cap_block_size(blocks, max_block=cfg.max_block).persist()
-    pairs = candidate_pairs(blocks, with_count=cfg.prior_features)
-    payload = doc_payload(
-        work,
-        id_col="_nid",
-        text_col=text_col,
-        topk=cfg.payload_topk,
-        hash_tokens=cfg.hash_tokens,
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        # the stages read more than once: pages (blocking, payload, id
+        # restore), blocks (both sides of the pair self-join; the two
+        # exchanges differ by projection, so AQE cannot reuse), payload
+        # (both sides of every pair)
+        df = build()
+        return df.persist() if name in ("pages", "blocks", "payload") else df
+
+    return _run_stages(
+        pages, stage, config or LinkageConfig(), id_col, text_col, url_col,
         embeddings=embeddings,
-        emb_dim=cfg.emb_dim if embeddings is not None else 0,
-    ).persist()
-    scored = score_pairs(pairs, payload, weights=cfg.weights, model=cfg.model)
-    edges = scored.where(F.col("score") >= cfg.edge_threshold).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    comp = connected_components(
-        edges,
-        checkpoint_dir=cfg.cc_checkpoint_dir,
-        fuse_rounds=cfg.cc_fuse_rounds,
-    )
-    ids = pages.select(F.col(id_col).alias("id"), nid.alias("_nid"))
-    if ids_integral:
-        # _nid == id: component (min _nid) IS the min member id already
-        id_t = pages.schema[id_col].dataType.simpleString()
-        return ids.join(comp, ids._nid == comp.node, "left").select(
-            "id",
-            F.coalesce("component", F.col("_nid")).cast(id_t).alias("cluster_id"),
-        )
-    # map hashed components back to original ids and restore the
-    # documented representative (cluster_id = min member id): two
-    # end-stage shuffles over (id, component) — one narrow row per page
-    labeled = ids.join(comp, ids._nid == comp.node, "left").select(
-        "id", F.coalesce("component", F.col("_nid")).alias("_comp")
-    )
-    reps = labeled.groupBy("_comp").agg(F.min("id").alias("cluster_id"))
-    return labeled.join(reps, "_comp").select("id", "cluster_id")
 
 
 def score_candidate_pairs(
@@ -327,33 +402,19 @@ def score_candidate_pairs(
     config: LinkageConfig | None = None,
     embeddings: DataFrame | None = None,
 ) -> DataFrame:
-    """Intermediate product: scored candidate pairs (id_a, id_b, features, score)."""
-    cfg = config or LinkageConfig()
-    pages = _widen_input(pages)
-    blocks = block_keys(
-        pages,
-        id_col=id_col,
-        text_col=text_col,
-        url_col=url_col,
-        num_hashes=cfg.num_hashes,
-        bands=cfg.bands,
-        shingle_k=cfg.shingle_k,
-        prefix_tokens=cfg.prefix_tokens,
-        hash_keys=cfg.hash_block_keys,
+    """Intermediate product: the candidate pairs ``link_pages`` scores,
+    (id_a, id_b, features, score), over input ids with id_a < id_b.
+
+    Blocking, capping and scoring run on the same working ids as
+    ``link_pages``, so a scorer trained on these pairs sees the candidate
+    set inference scores. Side-specific features (the token counts,
+    ``tfidf_norm_a``/``_b``, ``prior``) keep the pair's working-id
+    orientation, which need not match the input-id order.
+    """
+    return _run_stages(
+        pages, lambda name, build: build(), config or LinkageConfig(),
+        id_col, text_col, url_col, embeddings=embeddings, scored_only=True,
     )
-    blocks = salt_mega_blocks(blocks, max_block=cfg.max_block, n_salts=cfg.n_salts)
-    blocks = cap_block_size(blocks, max_block=cfg.max_block)
-    pairs = candidate_pairs(blocks, with_count=cfg.prior_features)
-    payload = doc_payload(
-        pages,
-        id_col=id_col,
-        text_col=text_col,
-        topk=cfg.payload_topk,
-        hash_tokens=cfg.hash_tokens,
-        embeddings=embeddings,
-        emb_dim=cfg.emb_dim if embeddings is not None else 0,
-    )
-    return score_pairs(pairs, payload, weights=cfg.weights, model=cfg.model)
 
 
 def pairwise_metrics(

@@ -18,7 +18,7 @@ Two families of legs:
   round 1.
 
 Host ceiling: memory bandwidth saturates at ~8 concurrent streaming
-processes (scripts/membw_probe.py: identical per-process numpy streaming
+processes (memory-bandwidth probe, BENCH/BASELINE.md: identical per-process numpy streaming
 work takes 6.1s at 1 proc, 8.8s at 8, 69.6s at 32; register-bound work
 scales cleanly to 32). Both N=2→4N=8 pairs sit INSIDE that envelope; the
 8→32 thread pair is outside it and is reported transparently.
@@ -143,7 +143,7 @@ Thread-scaling legs (1 JVM, shared heap), for continuity with round 1:
 local[2]→local[8] {f"{le:.3f}" if le is not None else "n/a"};
 local[8]→local[32] {f"{le32:.3f}" if le32 is not None else "n/a"} — the
 8→32 pair is outside the host's memory-bandwidth envelope. A
-fixed-work-per-process streaming probe (`python scripts/membw_probe.py`)
+fixed-work-per-process streaming probe (BENCH/BASELINE.md)
 shows the box saturates at ~8 concurrent memory-streaming processes
 (6.1s at 1 proc → 8.8s at 8 procs → 69.6s at 32 procs for identical
 per-process work), i.e. *no* memory-streaming workload can approach 4×

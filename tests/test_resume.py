@@ -70,8 +70,20 @@ def test_resume_mid_pipeline_identical(spark, corpus, tmp_path):
     assert manifest2["scored"]["complete"]
 
 
-def test_checkpointed_matches_direct(spark, corpus, tmp_path):
-    cfg = LinkageConfig()
+LAYOUTS = {
+    "plain": {"bucketed": False},
+    "bucketed": {"bucketed": True},
+    "dual": {"bucketed": True, "dual_bucket": True},
+}
+
+
+@pytest.mark.parametrize("id_bits", [64, 128])
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_checkpointed_matches_direct(spark, corpus, tmp_path, layout, id_bits):
+    # one stage graph behind both runners: the same widened input, id
+    # fold and caps. max_block=3 makes capping bite on this corpus, so a
+    # runner that blocked on different ids would keep different members
+    cfg = LinkageConfig(max_block=3, n_salts=2, id_bits=id_bits)
     direct = sorted(
         (r["id"], r["cluster_id"])
         for r in link_pages(corpus, config=cfg).collect()
@@ -79,7 +91,7 @@ def test_checkpointed_matches_direct(spark, corpus, tmp_path):
     ck = sorted(
         (r["id"], r["cluster_id"])
         for r in run_linkage_checkpointed(
-            spark, corpus, str(tmp_path / "run3"), cfg
+            spark, corpus, str(tmp_path / "run3"), cfg, **LAYOUTS[layout]
         ).collect()
     )
     assert direct == ck
@@ -91,16 +103,17 @@ def test_checkpointed_honours_cc_config(spark, corpus, tmp_path, monkeypatch):
     # performance choice: the clusters equal the default config's
     import dataclasses
 
-    from entity_linking_spark.operators import cluster
+    from entity_linking_spark.plans import pipeline
 
     seen = []
-    cc = cluster.connected_components
+    cc = pipeline.connected_components
 
     def spy(edges, **kwargs):
         seen.append(kwargs)
         return cc(edges, **kwargs)
 
-    monkeypatch.setattr(cluster, "connected_components", spy)
+    # the stage graph binds the name at import, in plans.pipeline
+    monkeypatch.setattr(pipeline, "connected_components", spy)
 
     def clusters(cfg, run):
         return sorted(
