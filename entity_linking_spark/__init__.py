@@ -9,8 +9,8 @@ re-expressed Spark-first:
   ``operators.cluster``),
 - large-scale training-data pipeline ops: dedup (exact / MinHash-LSH /
   SimHash / n-gram Jaccard / embedding cosine), similarity search, text
-  quality analysis (``operators.dedup``, ``operators.knn``,
-  ``operators.textstats``),
+  quality analysis — registry queries in ``queries`` (each a Spark plan
+  paired with a DuckDB oracle SQL string),
 - deterministic text extraction + tokenization contracts (``extract``,
   ``tokenize``),
 - per-stage checkpointing with lineage + counters for mid-pipeline resume

@@ -111,7 +111,6 @@ class StageCheckpointer:
         name: str,
         build: Callable[[], DataFrame],
         repartition_by: str | None = None,
-        num_partitions: int | None = None,
         digest: str | None = None,
     ) -> DataFrame:
         """Return the stage DataFrame, computing + persisting only if needed.
@@ -128,8 +127,9 @@ class StageCheckpointer:
             return self.spark.read.parquet(path)
         df = build()
         if repartition_by is not None:
-            n = num_partitions or self.spark.sparkContext.defaultParallelism
-            df = df.repartition(n, repartition_by)
+            df = df.repartition(
+                self.spark.sparkContext.defaultParallelism, repartition_by
+            )
         t0 = time.time()
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)

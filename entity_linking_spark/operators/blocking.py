@@ -36,10 +36,14 @@ from entity_linking_spark.hashing import md5hash64, seeded_hash64
 def norm_host_key(url: Column) -> Column:
     """Normalized host: lowercase, strip scheme + leading www. + port.
 
+    A malformed URL (spaces, bad %-escapes, no scheme) gives ``""`` — no
+    ``host:`` key — instead of failing the job: ``try_parse_url``, because
+    ``parse_url`` raises ``INVALID_URL`` under ANSI mode.
+
     Reference analog: the normalized fallback key
     (``/root/reference/src/data_fetchers.py:119-126``).
     """
-    host = F.parse_url(url, F.lit("HOST"))
+    host = F.try_parse_url(url, F.lit("HOST"))
     host = F.coalesce(host, F.lit(""))
     return F.regexp_replace(F.lower(host), r"^www\.", "")
 

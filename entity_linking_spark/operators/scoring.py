@@ -29,7 +29,6 @@ from entity_linking_spark.functions.similarity import (
     cosine_arrays,
     dot_arrays,
     jaro_winkler,
-    lev_ratio_cost2,
     lev_ratio_unit,
     tfidf_cosine_maps,
     tfidf_norm_map,
@@ -265,11 +264,7 @@ def pair_payload_half(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     return attach_pair_payload(pairs, payload, "id", cols, sides=("a",))
 
 
-def pair_features(
-    pairs: DataFrame,
-    payload: DataFrame,
-    use_cost2_lev: bool = False,
-) -> DataFrame:
+def pair_features(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     """Attach per-pair feature columns.
 
     Features (names keep the reference's vocabulary, ltr_bow.py:19-31):
@@ -277,12 +272,9 @@ def pair_features(
       cand_token_cnt / mention_token_cnt — token counts of each side
       jaccard          — distinct-token Jaccard
       str_sim          — Levenshtein ratio of the head tokens
-                          (ref: Levenshtein.ratio, simple_dataset.py:180).
-                          Default: unit-cost ratio via the JVM builtin
-                          (codegen'd, zero Python). ``use_cost2_lev=True``
-                          switches to the reference's exact cost-2
-                          semantics in an Arrow UDF — fidelity mode,
-                          ~240µs/pair vs ~ns.
+                          (ref: Levenshtein.ratio, simple_dataset.py:180):
+                          unit-cost ratio via the JVM builtin (codegen'd,
+                          zero Python)
       jw_sim           — Jaro-Winkler of the head tokens (north_star add)
       tfidf_norm_a/b   — TF-IDF L2 norms (ref: candidate_tfidf_norm)
 
@@ -335,15 +327,10 @@ def pair_features(
     set_b = F.map_keys(F.col("tfidf_b"))
     inter = F.size(F.array_intersect(set_a, set_b))
     uni = F.size(set_a) + F.size(set_b) - inter
-    str_sim = (
-        lev_ratio_cost2(head_a, head_b)
-        if use_cost2_lev
-        else lev_ratio_unit(head_a, head_b)
-    )
     out = (
         p.withColumn("tfidf_cos", tfidf_cosine_maps(F.col("tfidf_a"), F.col("tfidf_b")))
         .withColumn("jaccard", F.when(uni == 0, 0.0).otherwise(inter / uni))
-        .withColumn("str_sim", str_sim)
+        .withColumn("str_sim", lev_ratio_unit(head_a, head_b))
         .withColumn("jw_sim", jaro_winkler(head_a, head_b))
         .withColumn("tfidf_norm_a", tfidf_norm_map(F.col("tfidf_a")))
         .withColumn("tfidf_norm_b", tfidf_norm_map(F.col("tfidf_b")))

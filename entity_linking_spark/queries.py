@@ -37,28 +37,31 @@ Conventions:
 - hash-derived values go through `entity_linking_spark.hashing`, which is
   bit-identical across engines;
 - queries whose semantics are iterative (connected components) are flagged
-  SQL-oracle-able only where DuckDB's recursive CTE can express them.
+  SQL-oracle-able only where DuckDB's recursive CTE can express them;
+- Spark sides are built from the shipped operators (``operators/``: block
+  keys, block self-joins, MinHash, salting, pair payloads), so the oracle
+  checks the code the pipeline runs; only the SQL side is written
+  independently.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from entity_linking_spark.functions import text as X
-from entity_linking_spark.functions.similarity import (
-    cosine_arrays,
-    jaro_winkler,
-    lev_ratio_unit,
-)
+from entity_linking_spark.functions.similarity import cosine_arrays, lev_ratio_cost2
 from entity_linking_spark.hashing import (
     md5hash64,
     seeded_hash64,
     sql_md5hash64,
     sql_seeded_hash64,
 )
+from entity_linking_spark.operators import blocking
+from entity_linking_spark.operators.blocking import norm_text_prefix_key
+from entity_linking_spark.operators.pairs import attach_pair_payload, candidate_pairs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -106,6 +109,15 @@ def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _widen_input(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
+def _pfx_blocks(docs: DataFrame, *extra: str | Column) -> DataFrame:
+    """``(doc_id, block_key, *extra)``: the normalized 4-token prefix key
+    (``blocking.norm_text_prefix_key``) of every document with at least 4
+    tokens — the ``_SQL_PFX`` blocks of the oracle strings."""
+    return docs.where(F.size(X.words(F.col("text"))) >= 4).select(
+        "doc_id", norm_text_prefix_key(F.col("text")).alias("block_key"), *extra
+    )
+
+
 # ---------------------------------------------------------------------------
 # SQL fragments shared by oracle strings (documents-as-pages shaping)
 # ---------------------------------------------------------------------------
@@ -114,8 +126,8 @@ def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _SQL_TOKENS = X.sql_words("text")
 # normalized 4-token prefix key — must match blocking.norm_text_prefix_key
 _SQL_PFX = f"array_to_string(list_slice({_SQL_TOKENS}, 1, 4), ' ')"
-# synthetic url/host for documents (documents table has no url column; both
-# engines derive host the same way so parse_url vs string concat is moot)
+# synthetic host for documents (the documents table has no url column): the
+# Spark side builds http://<source>.example.com/ and block_keys parses its host
 _SQL_HOST = "(source || '.example.com')"
 
 
@@ -133,26 +145,16 @@ _SQL_HOST = "(source || '.example.com')"
     """,
 )
 def block_keys_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized blocking keys (host + text prefix).
+    """Normalized blocking keys (host + text prefix) through ``block_keys``
+    without MinHash bands.
 
     Reference: exact-key + unidecode-normalized fallback blocking,
     /root/reference/src/data_fetchers.py:91-126, src/utils.py:72-77.
     """
-    docs = _t(spark, sf_dir, "documents")
-    host = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat(F.lit("host:"), F.col("source"), F.lit(".example.com")).alias(
-            "block_key"
-        ),
+    docs = _t(spark, sf_dir, "documents").withColumn(
+        "url", F.concat(F.lit("http://"), F.col("source"), F.lit(".example.com/"))
     )
-    pfx = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat(
-            F.lit("pfx:"),
-            F.concat_ws(" ", F.slice(X.words(F.col("text")), 1, 4)),
-        ).alias("block_key"),
-    ).where(F.length("block_key") > 4)
-    return host.unionByName(pfx)
+    return blocking.block_keys(docs, id_col="doc_id", use_minhash=False)
 
 
 @register(
@@ -174,19 +176,17 @@ def minhash_signature_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature head (4 hash functions) per document.
 
     SURVEY §2.8 F22 (north_rule addition over the reference's exact-key
-    blocking). Zero-Python: explode + seeded min aggregation. Widened
-    read: the 16-md5s-per-shingle map side is the CPU hot spot.
+    blocking) through ``blocking.minhash_signature``'s md5 family; docs
+    with fewer than 3 tokens (all-null signature) have no row, as in the
+    oracle's unnest. Widened read: the md5-per-shingle map side is the CPU
+    hot spot.
     """
     docs = _tw(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id",
-        F.explode(X.word_shingles(X.words(F.col("text")), 3)).alias("shingle"),
-    )
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(seeded_hash64(F.col("shingle"), i)).alias(f"h{i}")
-            for i in range(4)
-        ]
+    sig = blocking.minhash_signature(
+        docs, "doc_id", "text", num_hashes=4, hash_family="md5"
+    ).where(F.col("minhash_sig")[0].isNotNull())
+    return sig.select(
+        "doc_id", *[F.col("minhash_sig")[i].alias(f"h{i}") for i in range(4)]
     )
 
 
@@ -208,19 +208,7 @@ def candidate_pairs_pfx(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/create_compats.py:148-172.
     """
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id").alias("id"), X.words(F.col("text")).alias("tokens")
-    ).where(F.size("tokens") >= 4)
-    b = toks.select(
-        "id", F.concat_ws(" ", F.slice("tokens", 1, 4)).alias("block_key")
-    )
-    a, c = b.alias("a"), b.alias("c")
-    return (
-        a.join(c, "block_key")
-        .where(F.col("a.id") < F.col("c.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("c.id").alias("id_b"))
-        .distinct()
-    )
+    return candidate_pairs(_pfx_blocks(docs), id_col="doc_id")
 
 
 @register(
@@ -267,28 +255,17 @@ def pair_scores_lev_cost2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark side. The oracle computes LCS independently via a
     recursive-CTE dynamic program (ratio = 2·LCS/lensum), so the fidelity
     variant is value-checked, not just pytest-golden."""
-    from entity_linking_spark.functions.similarity import lev_ratio_cost2
-
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id").alias("id"), X.words(F.col("text")).alias("tokens")
-    ).where(F.size("tokens") >= 4)
-    b = toks.select(
-        "id",
-        F.concat_ws(" ", F.slice("tokens", 1, 4)).alias("block_key"),
-        F.concat_ws(" ", F.slice("tokens", 1, 8)).alias("head"),
+    b = _pfx_blocks(docs, norm_text_prefix_key(F.col("text"), 8).alias("head"))
+    p = attach_pair_payload(
+        candidate_pairs(b, id_col="doc_id"), b, "doc_id", ["head"]
     )
-    a, c = b.alias("a"), b.alias("c")
-    return (
-        a.join(c, "block_key")
-        .where(F.col("a.id") < F.col("c.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("c.id").alias("id_b"),
-            F.round(
-                lev_ratio_cost2(F.col("a.head"), F.col("c.head")), 6
-            ).alias("lev2_sim"),
-        )
+    return p.select(
+        "id_a",
+        "id_b",
+        F.round(lev_ratio_cost2(F.col("head_a"), F.col("head_b")), 6).alias(
+            "lev2_sim"
+        ),
     )
 
 
@@ -388,23 +365,19 @@ def pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``candidate_pairs(with_count=True)``; two blocking-key families
       (token prefix-4 and prefix-3) so n_shared genuinely varies.
     """
-    from entity_linking_spark.operators.pairs import candidate_pairs
     from entity_linking_spark.operators.scoring import doc_payload, pair_features
 
     docs = _t(spark, sf_dir, "documents")
     pages = docs.select(F.col("doc_id").alias("id"), "text").where(
         F.size(X.words(F.col("text"))) >= 4
     )
-    toks = pages.select("id", X.words(F.col("text")).alias("tokens"))
-    blocks = toks.select(
-        "id", F.concat_ws(" ", F.slice("tokens", 1, 4)).alias("block_key")
+    blocks = pages.select(
+        "id", norm_text_prefix_key(F.col("text"), 4).alias("block_key")
     ).unionByName(
-        toks.select(
-            "id", F.concat_ws(" ", F.slice("tokens", 1, 3)).alias("block_key")
-        )
+        pages.select("id", norm_text_prefix_key(F.col("text"), 3).alias("block_key"))
     )
     pairs = candidate_pairs(blocks, with_count=True)
-    vocab = toks.select(F.explode("tokens").alias("token")).distinct()
+    vocab = pages.select(F.explode(X.words(F.col("text"))).alias("token")).distinct()
     comps = [
         (
             (
@@ -459,12 +432,7 @@ def top1_per_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: torch.argmax per candidate block,
     /root/reference/src/inference.py:26,53,72.
     """
-    docs = _t(spark, sf_dir, "documents")
-    b = docs.select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(X.words(F.col("text")), 1, 4)).alias("block_key"),
-        "n_chars",
-    ).where(F.size(X.words(F.col("text"))) >= 4)
+    b = _pfx_blocks(_t(spark, sf_dir, "documents"), "n_chars")
     w = Window.partitionBy("block_key").orderBy(F.desc("n_chars"), F.col("doc_id"))
     return (
         b.withColumn("rn", F.row_number().over(w))
@@ -822,47 +790,31 @@ def neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     - verify: exact 3-token-shingle Jaccard computed only on the bucketed
       candidates (block-local quadratic work).
     """
-    from entity_linking_spark.operators.blocking import (
-        lsh_band_keys,
-        minhash_signature,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    sigs = minhash_signature(
+    sigs = blocking.minhash_signature(
         docs, "doc_id", "text", num_hashes=16, shingle_k=3, hash_family="md5"
     )
     bands = sigs.where(F.col("minhash_sig")[0].isNotNull()).select(
         "doc_id",
         F.explode(
-            lsh_band_keys(F.col("minhash_sig"), 16, 4, hash_family="md5")
+            blocking.lsh_band_keys(F.col("minhash_sig"), 16, 4, hash_family="md5")
         ).alias("band_key"),
     )
-    a = bands.select(F.col("doc_id").alias("id_a"), "band_key")
-    b = bands.select(F.col("doc_id").alias("id_b"), "band_key")
-    cand = (
-        a.join(b, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cand = candidate_pairs(bands, id_col="doc_id", key_col="band_key")
     sets = docs.select(
         "doc_id",
         F.array_distinct(X.word_shingles(X.words(F.col("text")), 3)).alias(
             "shset"
         ),
     )
-    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("shset").alias("sa"))
-    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("shset").alias("sb"))
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    union = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard_sim"),
-        )
+    p = attach_pair_payload(cand, sets, "doc_id", ["shset"])
+    sa, sb = F.col("shset_a"), F.col("shset_b")
+    inter = F.size(F.array_intersect(sa, sb))
+    union = F.size(sa) + F.size(sb) - inter
+    return p.select(
+        "id_a",
+        "id_b",
+        F.round(inter.cast("double") / union, 6).alias("jaccard_sim"),
     )
 
 
@@ -1103,17 +1055,11 @@ def ann_bucketed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("v"),
         bucket.alias("bucket"),
     )
-    a, c = b.alias("a"), b.alias("c")
-    cos = F.round(cosine_arrays(F.col("a.v"), F.col("c.v")), 6)
+    pairs = candidate_pairs(b, id_col="vec_id", key_col="bucket", keep_key=True)
+    cos = F.round(cosine_arrays(F.col("v_a"), F.col("v_b")), 6)
     return (
-        a.join(c, "bucket")
-        .where(F.col("a.vec_id") < F.col("c.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("c.vec_id").alias("id_b"),
-            "bucket",
-            cos.alias("cos_sim"),
-        )
+        attach_pair_payload(pairs, b, "vec_id", ["v"])
+        .select("id_a", "id_b", "bucket", cos.alias("cos_sim"))
         .where(F.col("cos_sim") >= 0.2)
     )
 
@@ -1150,26 +1096,21 @@ def embedding_neardup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. This row subsumes the former unsalted `embedding_neardup`
     query (identical operator, minus skew handling) — registry compacted
     per round-2 verdict item 1."""
-    from entity_linking_spark.operators.blocking import salt_mega_blocks
-
     emb = _t(spark, sf_dir, "embeddings")
     blocks = emb.select(
         F.col("vec_id").alias("id"), F.col("label").cast("string").alias("block_key")
     )
-    salted = salt_mega_blocks(
+    salted = blocking.salt_mega_blocks(
         blocks, max_block=6, n_salts=4, hash_family="md5"
     )
-    v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    a = salted.select(F.col("id").alias("id_a"), F.col("block_key").alias("key"))
-    c = salted.select(F.col("id").alias("id_b"), F.col("block_key").alias("key"))
-    pairs = a.join(c, "key").where(F.col("id_a") < F.col("id_b"))
-    va = v.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vc = v.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vc"))
-    cos = F.round(cosine_arrays(F.col("va"), F.col("vc")), 6)
+    pairs = candidate_pairs(salted, keep_key=True)
+    v = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
+    )
+    cos = F.round(cosine_arrays(F.col("v_a"), F.col("v_b")), 6)
     return (
-        pairs.join(va, "id_a")
-        .join(vc, "id_b")
-        .select("id_a", "id_b", "key", cos.alias("cos_sim"))
+        attach_pair_payload(pairs, v, "id", ["v"])
+        .select("id_a", "id_b", F.col("block_key").alias("key"), cos.alias("cos_sim"))
         .where(F.col("cos_sim") >= 0.2)
     )
 
@@ -1554,28 +1495,11 @@ def cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.operators.cluster import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    t = docs.select(
-        F.col("doc_id").alias("id"),
-        X.words(F.col("text")).alias("tokens"),
-        F.md5(F.col("text").cast("binary")).alias("tkey"),
-    )
-    b = t.where(F.size("tokens") >= 4).select(
-        "id", F.concat_ws(" ", F.slice("tokens", 1, 4)).alias("bkey")
-    )
-    e1 = (
-        b.alias("a")
-        .join(b.alias("c"), "bkey")
-        .where(F.col("a.id") < F.col("c.id"))
-        .select(F.col("a.id").alias("src"), F.col("c.id").alias("dst"))
-    )
-    e2 = (
-        t.alias("a")
-        .join(t.alias("c"), "tkey")
-        .where(F.col("a.id") < F.col("c.id"))
-        .select(F.col("a.id").alias("src"), F.col("c.id").alias("dst"))
-    )
-    comp = connected_components(e1.union(e2))
-    all_ids = t.select(F.col("id").alias("doc_id"))
+    t = docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("tkey"))
+    e1 = candidate_pairs(_pfx_blocks(docs), id_col="doc_id")
+    e2 = candidate_pairs(t, id_col="doc_id", key_col="tkey")
+    comp = connected_components(e1.union(e2), src="id_a", dst="id_b")
+    all_ids = t.select("doc_id")
     return (
         all_ids.join(comp, all_ids.doc_id == comp.node, "left")
         .select(
@@ -1625,18 +1549,15 @@ def prior_fallback_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lookup order that determines blocks
     (/root/reference/src/data_fetchers.py:91-126 — SURVEY hard-part #3)."""
     docs = _t(spark, sf_dir, "documents")
-    m = docs.select("doc_id", X.words(F.col("text")).alias("toks")).where(
-        F.size("toks") >= 3
-    )
-    keyed = m.select(
+    keyed = docs.where(F.size(X.words(F.col("text"))) >= 3).select(
         "doc_id",
-        F.concat_ws(" ", F.slice("toks", 1, 3)).alias("key3"),
-        F.col("toks")[0].alias("key1"),
+        norm_text_prefix_key(F.col("text"), 3).alias("key3"),
+        X.words(F.col("text"))[0].alias("key1"),
     )
     prior = (
-        m.groupBy(F.concat_ws(" ", F.slice("toks", 1, 3)).alias("key3"))
+        keyed.groupBy("key3")
         .agg(
-            F.min(F.col("toks")[0]).alias("key1"),
+            F.min("key1").alias("key1"),
             F.min("doc_id").alias("entity_id"),
             F.count("*").alias("cnt"),
         )
@@ -1938,18 +1859,7 @@ def tfidf_pair_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = tf.join(F.broadcast(idf), "token").select(
         "doc_id", "token", (F.col("tf") * F.col("idf")).alias("w")
     )
-    b = docs.select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(X.words(F.col("text")), 1, 4)).alias("block_key"),
-    ).where(F.size(X.words(F.col("text"))) >= 4)
-    pairs = (
-        b.alias("a")
-        .join(b.alias("c"), "block_key")
-        .where(F.col("a.doc_id") < F.col("c.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("c.doc_id").alias("id_b")
-        )
-    )
+    pairs = candidate_pairs(_pfx_blocks(docs), id_col="doc_id")
     wa = w.select(F.col("doc_id").alias("id_a"), "token", F.col("w").alias("wa"))
     wb = w.select(F.col("doc_id").alias("id_b"), "token", F.col("w").alias("wb"))
     return (
@@ -2005,11 +1915,7 @@ def label_remap_in_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label → in-block position remap (reference P7:
     ``_get_labels_for_batch``, /root/reference/src/trainer.py:94-102 —
     label becomes its index in the candidate list, -1 when absent)."""
-    docs = _t(spark, sf_dir, "documents")
-    b = docs.select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(X.words(F.col("text")), 1, 4)).alias("block_key"),
-    ).where(F.size(X.words(F.col("text"))) >= 4)
+    b = _pfx_blocks(_t(spark, sf_dir, "documents"))
     lists = b.groupBy("block_key").agg(
         F.sort_array(F.collect_list("doc_id")).alias("members")
     )
@@ -2053,13 +1959,7 @@ def has_label_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from entity_linking_spark.operators.filters import filter_has_label
 
-    docs = _t(spark, sf_dir, "documents")
-    b = docs.select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(X.words(F.col("text")), 1, 4)).alias(
-            "block_key"
-        ),
-    ).where(F.size(X.words(F.col("text"))) >= 4)
+    b = _pfx_blocks(_t(spark, sf_dir, "documents"))
     lists = b.groupBy("block_key").agg(
         F.collect_list("doc_id").alias("members")
     )

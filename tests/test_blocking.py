@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from entity_linking_spark.operators.blocking import (
     block_keys,
     minhash_signature,
+    norm_host_key,
     salt_mega_blocks,
 )
 
@@ -58,6 +59,32 @@ def test_short_docs_share_no_band_keys(spark):
     bk = block_keys(docs, id_col="id", url_col=None, num_hashes=4, bands=2)
     band_rows = bk.where(F.col("block_key").rlike("^b[0-9]+:")).collect()
     assert band_rows == []
+
+
+def test_norm_host_key_normalizes(spark):
+    df = spark.createDataFrame(
+        [("HTTPS://WWW.Example.COM:8080/x",)], "url string"
+    )
+    assert df.select(norm_host_key(F.col("url"))).first()[0] == "example.com"
+
+
+def test_malformed_url_keeps_other_keys(spark):
+    # under ANSI mode parse_url raises INVALID_URL on these; one such page
+    # must lose only its host: key, not fail the run
+    text = "alpha beta gamma delta epsilon zeta"
+    bad = ["not a url", "http://exa mple.com/a b", "https://ok.example.com/a%zz"]
+    rows = [(f"bad{i}", u, text) for i, u in enumerate(bad)]
+    rows.append(("good", "http://www.Good.org/p", text))
+    pages = spark.createDataFrame(rows, "id string, url string, text string")
+    keys = {}
+    for r in block_keys(pages, num_hashes=4, bands=2, id_col="id").collect():
+        keys.setdefault(r["id"], set()).add(r["block_key"])
+    good = keys["good"]
+    assert "host:good.org" in good
+    assert len(good) == 4  # host:, pfx: and two band keys
+    for i in range(len(bad)):
+        # same text as "good": same pfx: and band keys, and no host: key
+        assert keys[f"bad{i}"] == good - {"host:good.org"}
 
 
 def test_salting_bounds_block_size(spark):
