@@ -5,13 +5,15 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 The flagship linkage pipeline is timed end-to-end (pages/sec is derivable:
 docs / pipeline seconds); registry queries are forced with .count() so
-results never funnel through the driver.
+results never funnel through the driver, and each reports the median of
+three timed calls after one untimed warm-up call.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -100,9 +102,13 @@ def main() -> None:
 
     qs = registry()
     for name in BENCH_REGISTRY_QUERIES:
-        t0 = time.time()
         qs[name](spark, sf_dir).count()
-        timings[name] = round(time.time() - t0, 3)
+        runs = []
+        for _ in range(3):
+            t0 = time.time()
+            qs[name](spark, sf_dir).count()
+            runs.append(time.time() - t0)
+        timings[name] = round(statistics.median(runs), 3)
 
     total = round(sum(timings.values()), 3)
     out = {

@@ -3,17 +3,22 @@
 job resumes mid-pipeline").
 
 Production target is Iceberg tables (atomic snapshot commits); this module
-implements the same contract on plain parquet + a JSON manifest because the
+implements the same contract on parquet + a JSON manifest because the
 sandbox image carries no Iceberg jars. The interface is format-agnostic:
-swap ``_write``/``_read`` for ``df.writeTo(table).createOrReplace()`` and
-the resume logic is unchanged.
+swap the write in ``stage`` and ``_read`` for
+``df.writeTo(table).createOrReplace()`` and the resume logic is unchanged.
+
+Each stage costs one write job and one manifest save: the stage's row
+count comes from an ``Observation`` on the write job itself, and the
+manifest is the only record beside the stage's files. Per-partition
+counters are derived on demand by ``StageCheckpointer.metrics()`` from the
+stages as a resumed run reads them.
 
 Reference analog: the reference resumes via epoch checkpoints +
 ``start_from_page_num`` (/root/reference/src/trainer.py:169,
 src/runner.py:22) and memoizes stage products in pickle caches
 (src/cache.py:20-27); here each stage is a columnar table plus a manifest
-entry, and counters live in a ``_metrics`` table
-(analog of src/experiment.py:67-98 results files).
+entry (analog of src/experiment.py:67-98 results files).
 """
 
 from __future__ import annotations
@@ -24,8 +29,9 @@ import os
 import re
 import time
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -70,7 +76,7 @@ class StageCheckpointer:
     Usage::
 
         ckpt = StageCheckpointer(spark, "/data/run1")
-        blocks = ckpt.stage("blocks", lambda: block_keys(pages))
+        blocks = ckpt.stage("blocks", lambda: block_keys(pages), bucket_by="block_key")
         pairs  = ckpt.stage("pairs",  lambda: candidate_pairs(blocks))
     """
 
@@ -94,6 +100,13 @@ class StageCheckpointer:
     def _stage_path(self, name: str) -> str:
         return os.path.join(self.base_dir, f"stage_{name}")
 
+    def _table(self, name: str) -> str:
+        return (
+            "elspark_ckpt_"
+            + hashlib.sha256(self.base_dir.encode()).hexdigest()[:10]
+            + f"_{name}"
+        )
+
     def is_complete(self, name: str, digest: str | None = None) -> bool:
         entry = self.manifest.get(name, {})
         if not (entry.get("complete", False) and os.path.exists(self._stage_path(name))):
@@ -110,171 +123,114 @@ class StageCheckpointer:
         self,
         name: str,
         build: Callable[[], DataFrame],
-        repartition_by: str | None = None,
         digest: str | None = None,
+        bucket_by: str | list[str] | None = None,
+        num_buckets: int | None = None,
     ) -> DataFrame:
         """Return the stage DataFrame, computing + persisting only if needed.
 
-        ``repartition_by`` lets callers key the written layout on the
-        blocking key (north_rule: shuffle partitioning keyed on blocking
-        keys) so the downstream self-join reads co-partitioned data.
-
         ``digest`` (see ``config_digest``) invalidates a completed stage
         whose recorded digest differs — changed params force a rebuild.
+
+        ``bucket_by`` writes the stage as a BUCKETED table sorted on the
+        bucket columns (``num_buckets`` defaults to the default
+        parallelism). Its scan reports ``hashpartitioning`` on those
+        columns, so a later equi-join on them needs no exchange on this
+        side (BENCH/BASELINE.md: scheduled hash-exchanges 2→1 on the
+        scored stage). The files live under the same ``stage_<name>``
+        path as a plain stage (``saveAsTable`` with an explicit LOCATION),
+        and the bucket spec is in the manifest, so a new session resuming
+        the run_dir re-registers the table and keeps the exchange-free
+        scan.
+
+        One write job per stage: the manifest's ``rows`` is an
+        ``Observation`` on that job, and completion, ``rows``, ``digest``,
+        ``schema`` and the bucket spec land in one atomic manifest save.
         """
-        path = self._stage_path(name)
         if self.is_complete(name, digest=digest):
-            return self.spark.read.parquet(path)
-        df = build()
-        if repartition_by is not None:
-            df = df.repartition(
-                self.spark.sparkContext.defaultParallelism, repartition_by
+            return self._read(name)
+        bb = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by or [])
+        obs = Observation()
+        df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
+        path = self._stage_path(name)
+        spec: dict = {}
+        t0 = time.time()
+        if bb:
+            nb = num_buckets or self.spark.sparkContext.defaultParallelism
+            tbl = self._table(name)
+            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (
+                df.write.mode("overwrite")
+                .option("path", path)
+                .bucketBy(nb, *bb)
+                .sortBy(*bb)
+                .saveAsTable(tbl)
             )
-        t0 = time.time()
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        self._record_metrics(name, out, time.time() - t0, digest=digest)
-        return out
-
-    def bucketed_stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        bucket_by: str | list[str],
-        num_buckets: int | None = None,
-        sort_by: str | list[str] | None = None,
-        digest: str | None = None,
-    ) -> DataFrame:
-        """Materialize a stage as a BUCKETED, sorted table.
-
-        The scan of a bucketed table reports ``hashpartitioning`` on the
-        bucket columns, so a downstream equi-join on those columns needs
-        NO exchange on this side — the measured deployment lever from the
-        bucketed A/B (BENCH/BASELINE.md: scheduled hash-exchanges 2→1 on
-        the scored stage; at 100 TB the payload join ships TBs per
-        removed exchange). Files live under the same
-        ``stage_<name>`` path as plain stages (``saveAsTable`` with an
-        explicit LOCATION); the bucket spec is recorded in the manifest
-        so a NEW session resuming this run_dir re-registers the external
-        table and still gets the exchange-free scan.
-        """
-        tbl = (
-            "elspark_ckpt_"
-            + hashlib.sha256(self.base_dir.encode()).hexdigest()[:10]
-            + f"_{name}"
-        )
-        path = self._stage_path(name)
-        bb = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-        sb = (
-            [sort_by] if isinstance(sort_by, str)
-            else (list(sort_by) if sort_by else bb)
-        )
-        if self.is_complete(name, digest=digest):
-            if not self.spark.catalog.tableExists(tbl):
-                e = self.manifest[name]
-                sorted_clause = f" SORTED BY ({', '.join(e['sort_by'])})"
-                self.spark.sql(
-                    f"CREATE TABLE {tbl} ({e['schema_ddl']}) USING PARQUET "
-                    f"CLUSTERED BY ({', '.join(e['bucket_by'])})"
-                    f"{sorted_clause} INTO {e['num_buckets']} BUCKETS "
-                    f"LOCATION '{path}'"
-                )
-            return self.spark.table(tbl)
-        df = build()
-        nb = num_buckets or self.spark.sparkContext.defaultParallelism
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        t0 = time.time()
-        (
-            df.write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(nb, *bb)
-            .sortBy(*sb)
-            .saveAsTable(tbl)
-        )
-        out = self.spark.table(tbl)
-        # bucket spec + complete flag land in ONE manifest save (round-4
-        # advice): a crash between two saves would otherwise leave
-        # complete=true with no bucket spec, and a fresh-session resume
-        # (catalog table absent) would KeyError on e['sort_by'] with no
-        # way to self-heal
-        self._record_metrics(
-            name,
-            out,
-            time.time() - t0,
-            digest=digest,
-            extra={
+            spec = {
                 "schema_ddl": ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in out.schema.fields
+                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
                 ),
                 "num_buckets": nb,
                 "bucket_by": bb,
-                "sort_by": sb,
-            },
-        )
-        return out
-
-    # -- lineage + counters -----------------------------------------------
-    def _record_metrics(
-        self,
-        name: str,
-        df: DataFrame,
-        secs: float,
-        digest: str | None = None,
-        extra: dict | None = None,
-    ) -> None:
-        """Per-partition row counters → ``_metrics/stage=<name>`` + manifest.
-
-        ``extra`` fields (e.g. a bucketed stage's bucket spec) are merged
-        into the manifest entry BEFORE the save, so stage completeness and
-        everything a resume needs are recorded atomically.
-
-        Overwriting a per-stage path (instead of appending to a shared
-        table) makes retries idempotent: a crash between the stage write and
-        the manifest save leaves counters that the retry replaces, so
-        lineage counters always sum to the stage row count.
-
-        One counting scan total: the per-partition aggregate is collected
-        (it is at most one row per partition), its sum IS the manifest row
-        count — no separate ``df.count()`` job — and the counter table is
-        written back from the already-collected local rows.
-        """
-        counter_rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        rows = sum(r["rows"] for r in counter_rows)
-        per_part = self.spark.createDataFrame(
-            [(r["partition_id"], r["rows"]) for r in counter_rows] or [(0, 0)],
-            "partition_id int, rows long",
-        ).select(
-            "partition_id",
-            "rows",
-            F.lit(name).alias("stage"),
-            F.current_timestamp().alias("ts"),
-        )
-        per_part.write.mode("overwrite").parquet(
-            os.path.join(self.base_dir, "_metrics", f"stage={name}")
-        )
+            }
+        else:
+            df.write.mode("overwrite").parquet(path)
         self.manifest[name] = {
             "complete": True,
-            "rows": rows,
-            "seconds": round(secs, 3),
+            "rows": obs.get["rows"],
+            "seconds": round(time.time() - t0, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "schema": df.schema.simpleString(),
             "digest": digest,
-            **(extra or {}),
+            **spec,
         }
         self._save_manifest()
+        return self._read(name)
 
+    def _read(self, name: str) -> DataFrame:
+        """The completed stage as a later stage (or a resumed run) reads it."""
+        e = self.manifest[name]
+        if "bucket_by" not in e:
+            return self.spark.read.parquet(self._stage_path(name))
+        tbl = self._table(name)
+        if not self.spark.catalog.tableExists(tbl):
+            cols = ", ".join(e["bucket_by"])
+            self.spark.sql(
+                f"CREATE TABLE {tbl} ({e['schema_ddl']}) USING PARQUET "
+                f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
+                f"INTO {e['num_buckets']} BUCKETS "
+                f"LOCATION '{self._stage_path(name)}'"
+            )
+        return self.spark.table(tbl)
+
+    # -- counters ----------------------------------------------------------
     def metrics(self) -> DataFrame:
-        # read only the per-stage subdirs — a run_dir created by an older
-        # layout may still hold flat appended files directly under
-        # _metrics/, which must not be double-counted
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            os.path.join(self.base_dir, "_metrics", "stage=*")
-        )
+        """Per-partition row counters of every completed stage →
+        ``(partition_id int, rows long, stage string, ts timestamp)``.
+
+        Counted over the stage as a resumed run reads it (one
+        ``spark_partition_id`` group-by per stage, when this frame is
+        queried), so the counters sum to the manifest's ``rows``; ``ts``
+        is the stage's ``completed_at``.
+        """
+        frames = [
+            self._read(name)
+            .groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+            .select(
+                "partition_id",
+                "rows",
+                F.lit(name).alias("stage"),
+                F.lit(e["completed_at"]).cast("timestamp").alias("ts"),
+            )
+            for name, e in sorted(self.manifest.items())
+            if self.is_complete(name)
+        ]
+        if not frames:
+            return self.spark.createDataFrame(
+                [], "partition_id int, rows long, stage string, ts timestamp"
+            )
+        return reduce(DataFrame.unionByName, frames)
 
 
 def run_linkage_checkpointed(
@@ -294,20 +250,20 @@ def run_linkage_checkpointed(
     The stage graph is ``link_pages``' own (``plans.pipeline``): the same
     input widening, the same int64/128-bit working-id fold and the same
     id restore, so the clusters equal ``link_pages``' for one config
-    (tests/test_resume.py). Only the materialization differs: ``blocks``
-    is written repartitioned by ``block_key``, and ``pairs``,
-    ``payload``, ``scored`` and ``clusters`` as checkpoints. Killing the
-    job after any stage and re-running reuses all completed stages
-    (tests/test_resume.py proves identical output either way). Stages
-    carry working ids; a run_dir written before the fold (string-id
-    stages) has a different digest and rebuilds.
+    (tests/test_resume.py). Only the materialization differs: ``blocks``,
+    ``pairs``, ``payload``, ``scored`` and ``clusters`` are written as
+    checkpoints, one write job each. Killing the job after any stage and
+    re-running reuses all completed stages (tests/test_resume.py proves
+    identical output either way). Stages carry working ids; a run_dir
+    written by an older layout has a different digest and rebuilds.
 
-    ``bucketed`` (default True): write the ``pairs`` stage bucketed on
-    ``id_a`` and the ``payload`` stage bucketed on ``id`` — scheduled
-    hash-exchanges 2→1 in the scored stage; the removed exchange ships
-    the full payload at scale (BENCH/BASELINE.md). Set False for
-    plain-parquet stages (portable to engines that cannot read Spark
-    bucket metadata).
+    ``bucketed`` (default True): write ``blocks`` bucketed on
+    ``block_key`` (the pair self-join reads both sides exchange-free),
+    ``pairs`` bucketed on ``id_a`` and ``payload`` bucketed on ``id`` —
+    scheduled hash-exchanges 2→1 in the scored stage; the removed
+    exchange ships the full payload at scale (BENCH/BASELINE.md). Set
+    False for plain-parquet stages (portable to engines that cannot read
+    Spark bucket metadata).
 
     ``dual_bucket`` (requires ``bucketed``): additionally persist a
     ``pairs_payload_a`` stage — pairs with prior features + the id_a-side
@@ -341,26 +297,22 @@ def run_linkage_checkpointed(
             "id_col": id_col,
             "text_col": text_col,
             "url_col": url_col,
-            "pipeline_version": 4,
+            "pipeline_version": 5,
             # layout change invalidates stages written the other way
             "bucketed": bucketed,
             "dual_bucket": dual_bucket,
         }
     )
     buckets = (
-        {"pairs": "id_a", "payload": "id", "pairs_payload_a": "id_b"}
+        {"blocks": "block_key", "pairs": "id_a", "payload": "id",
+         "pairs_payload_a": "id_b"}
         if bucketed else {}
     )
 
     def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         if name == "pages":
             return build()  # the input itself: re-read on resume
-        if name in buckets:
-            return ckpt.bucketed_stage(
-                name, build, bucket_by=buckets[name], digest=dig
-            )
-        by = "block_key" if name == "blocks" else None
-        return ckpt.stage(name, build, repartition_by=by, digest=dig)
+        return ckpt.stage(name, build, digest=dig, bucket_by=buckets.get(name))
 
     return _run_stages(
         pages, stage, cfg, id_col, text_col, url_col,

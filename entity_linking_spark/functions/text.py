@@ -87,20 +87,6 @@ def sql_word_shingles(tokens_expr: str, k: int) -> str:
     )
 
 
-def char_shingles(c: Column, k: int) -> Column:
-    """k-char shingles of the normalized text (for MinHash over short docs)."""
-    norm = F.regexp_replace(fold_ascii(c), "[^a-z0-9]+", " ")
-    n = F.length(norm)
-    idx = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: F.substring(norm, i, F.lit(k)))
-
-
-def token_count(c: Column) -> Column:
-    return F.size(words(c))
-
-
 # Compact English stopword list (public-domain function words; the
 # reference filters with nltk's English list, src/simple_dataset.py:95 —
 # the sandbox has no nltk, so the list is inlined).
@@ -184,13 +170,6 @@ def sql_is_noun(tok: str) -> str:
         f" AND {tok} NOT IN ({fw})"
         f" AND (regexp_matches({tok}, '{NOUN_SUFFIX_RE}')"
         f"      OR NOT regexp_matches({tok}, '{NONNOUN_SUFFIX_RE}')))"
-    )
-
-
-def stopword_ratio(tokens: Column, stopwords: list[str]) -> Column:
-    n = F.size(tokens)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.size(F.filter(tokens, lambda t: t.isin(stopwords))) / n
     )
 
 

@@ -59,6 +59,3 @@ def sql_md5hash64(expr: str) -> str:
 def sql_seeded_hash64(expr: str, seed: int) -> str:
     return sql_md5hash64(f"'{seed}|' || ({expr})::varchar")
 
-
-def sql_bucket(expr: str, n: int, seed: int = 0) -> str:
-    return f"({sql_seeded_hash64(expr, seed)} % {n})"

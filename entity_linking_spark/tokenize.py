@@ -222,21 +222,6 @@ def tokenize_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: parse_text_for_tokens(t or ""))
 
 
-@F.pandas_udf(
-    T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("start", T.IntegerType()),
-                T.StructField("end", T.IntegerType()),
-            ]
-        )
-    )
-)
-def sentence_spans_udf(text: pd.Series) -> pd.Series:
-    return text.map(
-        lambda t: [{"start": s, "end": e} for s, e in sentence_spans(t or "")]
-    )
-
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def mention_sentence_udf(
     text: pd.Series, mention: pd.Series, offset: pd.Series

@@ -17,8 +17,10 @@ Local smoke (what the sandbox supports):
         --out /tmp/run1
 
 The job is the checkpointed pipeline (``run_linkage_checkpointed``): every
-stage lands in ``--out`` with a manifest + per-partition counters, so
-re-submitting after a failure resumes mid-pipeline.
+stage lands in ``--out`` in one write job, recorded with its row count in
+the run's manifest (``StageCheckpointer.metrics()`` gives the
+per-partition counters), so re-submitting after a failure resumes
+mid-pipeline.
 """
 
 from __future__ import annotations
