@@ -22,7 +22,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     ``link_pages`` (SURVEY.md §7.1): multi-scheme blocking (host /
     normalized-prefix / MinHash-LSH band keys) → salted + capped blocks →
-    block self-join → JVM+Arrow pair scoring → threshold → large-star/
+    block self-join → JVM pair scoring → threshold → large-star/
     small-star connected components. Returns (id, cluster_id, url): one
     row per document, cluster_id = the cluster's minimum member id.
     """

@@ -16,7 +16,9 @@ re-expressed Spark-first:
 - per-stage checkpointing with lineage + counters for mid-pipeline resume
   (``checkpoint``, ``plans.pipeline``).
 
-Everything is DataFrame/Catalyst-first; Python appears only in vectorized
+Everything is DataFrame/Catalyst-first: the flagship pipeline runs no
+Python worker (its two string measures are Java kernels, see
+``functions.similarity``); elsewhere Python appears only in vectorized
 pandas/Arrow UDFs (never per-row Python UDFs).
 """
 

@@ -1,9 +1,18 @@
-"""Pairwise similarity measures.
+"""Pairwise similarity measures, all evaluated inside the JVM.
 
-JVM-side column expressions wherever Spark has a builtin (Levenshtein,
-array/map algebra for cosine); Arrow-batched pandas UDFs for the two
-measures Spark lacks (Levenshtein *ratio* with substitution-cost-2
-semantics, Jaro-Winkler).
+Spark builtins where Spark has the measure (Levenshtein, array/map algebra
+for cosine). The two measures Spark lacks, Levenshtein *ratio* with
+substitution-cost-2 semantics and Jaro-Winkler, are JVM kernels in
+``StringKernels.java``, called as Spark UDFs. No row crosses into Python.
+
+Why kernels, and why Janino: a Python UDF's cost is mostly the boundary
+(Arrow batches shipped to a Python worker and back), not the function
+body, and an exact higher-order-function SQL version of Jaro-Winkler ran
+2.5-4× slower than the Python UDF, because Spark interprets lambdas. The
+kernels are compiled on first use, once per SparkContext, by Janino, the
+compiler Spark already carries for whole-stage codegen. So no JDK is needed
+at run time and no binary is kept in git, and the kernels ship to
+executors as a jar through ``addJar``.
 
 Reference parity notes:
 - ``Levenshtein.ratio`` in the reference (``/root/reference/src/
@@ -11,7 +20,9 @@ Reference parity notes:
   substitutions cost 2 — equivalently ``(len_a + len_b - indel_distance) /
   (len_a + len_b)`` = ``2*LCS / (len_a + len_b)``. That is NOT derivable
   from Spark's unit-cost ``F.levenshtein``; ``lev_ratio_cost2`` replicates
-  it exactly (golden-tested in ``tests/test_similarity.py``).
+  it exactly. Goldens in ``tests/test_similarity.py`` pin the Python
+  reference ``tests/similarity_reference.py``, and
+  ``tests/test_string_kernels.py`` checks both kernels against it.
 - Jaro-Winkler is required by the target pipeline (BASELINE.json
   north_star); implemented to match DuckDB's ``jaro_winkler_similarity``
   bit-for-bit so the oracle can check it (prefix weight 0.1, prefix cap 4,
@@ -20,11 +31,16 @@ Reference parity notes:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column
+import os
+import threading
+import zipfile
+from pathlib import Path
+
+from py4j.java_gateway import JavaObject
+from pyspark import SparkContext, SparkFiles
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.classic.column import _to_java_column, _to_seq
 
 
 # ---------------------------------------------------------------------------
@@ -94,93 +110,81 @@ def tfidf_cosine_maps(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched pandas UDFs (measures Spark lacks)
+# JVM kernels (measures Spark lacks), compiled from StringKernels.java
 # ---------------------------------------------------------------------------
 
-def _lev_ratio_cost2_one(a: str, b: str) -> float:
-    """python-Levenshtein `ratio` semantics: (lensum - indel) / lensum.
+_KERNEL_SOURCE = Path(__file__).with_name("StringKernels.java")
+_KERNELS = {"jaro_winkler": "JaroWinkler", "lev_ratio_cost2": "LevRatioCost2"}
 
-    DP over the shorter string with numpy inner rows — the per-pair loop is
-    O(len_a) Python iterations with vectorized O(len_b) numpy work each,
-    which keeps the Arrow batch fast for the short strings (titles, keys)
-    this is applied to.
+_lock = threading.Lock()
+_loaded_for: tuple[str, int] | None = None
+_udfs: dict[str, JavaObject] = {}
+
+
+def _compile_kernels(sc: SparkContext) -> dict[str, JavaObject]:
+    """Compile ``StringKernels.java`` with Janino, ship it, wrap each kernel.
+
+    The classes go into a jar under the context's ``SparkFiles`` root
+    (deleted when the context stops), ``addJar`` hands it to executors,
+    and the driver loads the kernels from the same jar.
     """
-    if a == b:
-        return 1.0
-    la, lb = len(a), len(b)
-    lensum = la + lb
-    if lensum == 0:
-        return 1.0
-    if la == 0 or lb == 0:
-        return 0.0
-    # LCS length via DP; indel = lensum - 2*LCS
-    bb = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    prev = np.zeros(lb + 1, dtype=np.int32)
-    for ca in a:
-        eq = (bb == ord(ca)).astype(np.int32)
-        cur = np.zeros(lb + 1, dtype=np.int32)
-        np.maximum(prev[1:], prev[:-1] + eq, out=cur[1:])
-        np.maximum.accumulate(cur, out=cur)
-        prev = cur
-    lcs = int(prev[-1])
-    return (lensum - (lensum - 2 * lcs)) / lensum
+    jvm, gateway = sc._jvm, sc._gateway
+    Class = jvm.java.lang.Class
+    udf2 = Class.forName("org.apache.spark.sql.api.java.UDF2")
+    compiler = jvm.org.codehaus.janino.SimpleCompiler()
+    compiler.setParentClassLoader(udf2.getClassLoader())
+    compiler.cook(_KERNEL_SOURCE.name, _KERNEL_SOURCE.read_text())
+    classes = compiler.getBytecodes()
+    jar_dir = os.path.join(SparkFiles.getRootDirectory(), "string_kernels")
+    os.makedirs(jar_dir, exist_ok=True)
+    jar = os.path.join(jar_dir, "string_kernels.jar")
+    with zipfile.ZipFile(jar, "w") as zf:
+        for name in classes.keySet():
+            zf.writestr(name.replace(".", "/") + ".class", classes.get(name))
+    sc._jsc.sc().addJar(jar)
+
+    urls = gateway.new_array(jvm.java.net.URL, 1)
+    urls[0] = jvm.java.io.File(jar).toURI().toURL()
+    loader = jvm.java.net.URLClassLoader(urls, udf2.getClassLoader())
+    # functions.udf(UDF2, DataType) is named by reflection: py4j resolves a
+    # plain call to the untyped udf(Object, DataType), which Spark refuses
+    sig = gateway.new_array(Class, 2)
+    sig[0] = udf2
+    sig[1] = Class.forName("org.apache.spark.sql.types.DataType")
+    java_udf = Class.forName("org.apache.spark.sql.functions").getMethod("udf", sig)
+    no_params = gateway.new_array(Class, 0)
+    no_args = gateway.new_array(jvm.java.lang.Object, 0)
+    udfs = {}
+    for name, cls in _KERNELS.items():
+        kernel = (
+            loader.loadClass(f"entity_linking_spark.functions.StringKernels${cls}")
+            .getDeclaredConstructor(no_params)
+            .newInstance(no_args)
+        )
+        args = gateway.new_array(jvm.java.lang.Object, 2)
+        args[0] = kernel
+        args[1] = jvm.org.apache.spark.sql.types.DataTypes.DoubleType
+        udfs[name] = java_udf.invoke(None, args).withName(name)
+    return udfs
 
 
-@F.pandas_udf(T.DoubleType())
-def lev_ratio_cost2(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_lev_ratio_cost2_one(x or "", y or "") for x, y in zip(a, b)],
-        dtype="float64",
-    )
+def _kernel(name: str, a: Column | str, b: Column | str) -> Column:
+    """Apply a JVM kernel, compiling the kernels once per SparkContext."""
+    global _loaded_for, _udfs
+    sc = SparkSession.active().sparkContext
+    context = (sc.applicationId, sc.startTime)
+    with _lock:
+        if _loaded_for != context:
+            _udfs, _loaded_for = _compile_kernels(sc), context
+        udf = _udfs[name]
+    return Column(udf.apply(_to_seq(sc, [a, b], _to_java_column)))
 
 
-def _jaro(a: str, b: str) -> float:
-    # pure-python on purpose: for the short strings this runs on, numpy's
-    # per-op overhead makes a vectorized variant ~4x SLOWER (measured
-    # 258µs vs 68µs per pair); the window-limited scan with early break
-    # is the fast shape here
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        # DuckDB's jaro_winkler_similarity returns 0.0 even for ("","")
-        return 0.0
-    window = max(la, lb) // 2 - 1
-    if window < 0:
-        window = 0
-    b_taken = [False] * lb
-    m = 0
-    a_matches: list[str] = []
-    for i, ca in enumerate(a):
-        lo = i - window if i - window > 0 else 0
-        hi = i + window + 1 if i + window + 1 < lb else lb
-        for j in range(lo, hi):
-            if not b_taken[j] and b[j] == ca:
-                b_taken[j] = True
-                m += 1
-                a_matches.append(ca)
-                break
-    if m == 0:
-        return 0.0
-    b_matches = [b[j] for j in range(lb) if b_taken[j]]
-    t = sum(1 for x, y in zip(a_matches, b_matches) if x != y) // 2
-    return (m / la + m / lb + (m - t) / m) / 3.0
+def lev_ratio_cost2(a: Column | str, b: Column | str) -> Column:
+    """python-Levenshtein ``ratio`` (substitutions cost 2), as a double."""
+    return _kernel("lev_ratio_cost2", a, b)
 
 
-def _jaro_winkler_one(a: str, b: str, p: float = 0.1, boost_threshold: float = 0.7) -> float:
-    j = _jaro(a, b)
-    if j <= boost_threshold:
-        return j
-    prefix = 0
-    for ca, cb in zip(a[:4], b[:4]):
-        if ca == cb:
-            prefix += 1
-        else:
-            break
-    return j + prefix * p * (1.0 - j)
-
-
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_jaro_winkler_one(x or "", y or "") for x, y in zip(a, b)],
-        dtype="float64",
-    )
+def jaro_winkler(a: Column | str, b: Column | str) -> Column:
+    """DuckDB's ``jaro_winkler_similarity``, as a double; null reads as ""."""
+    return _kernel("jaro_winkler", a, b)

@@ -6,10 +6,11 @@ where a web-page pair has an analog (feature list:
 ``src/simple_dataset.py:149-220``), plus the Jaro-Winkler measure the
 target pipeline adds (BASELINE.json north_star).
 
-Everything except the two string-similarity UDFs is JVM-side Catalyst
-expressions (map algebra for TF-IDF, array algebra for Jaccard), so the
-scoring stage stays inside whole-stage codegen; the UDFs are Arrow-batched
-pandas UDFs (never per-row Python — BASELINE.json input_hint).
+Every feature is computed in the JVM: Catalyst expressions (map algebra
+for TF-IDF, array algebra for Jaccard, Spark's Levenshtein) inside
+whole-stage codegen, and Jaro-Winkler as a Java UDF from
+``functions/StringKernels.java``. No pair crosses into a Python worker
+(BASELINE.json input_hint: no per-row Python).
 
 Scorer: fixed-weight linear model (reference:
 ``src/fixed_weights_model.py:4-10``) — a pure column expression. The

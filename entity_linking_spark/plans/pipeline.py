@@ -9,7 +9,8 @@ One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
     pairs     → block self-join, id_a < id_b, dedup
     payload   → per-page TF-IDF / head / token-count (/ embedding) row
     [pairs_payload_a] → pairs with the id_a-side payload attached
-    scored    → JVM+Arrow pair features ▷ linear / learned score
+    scored    → JVM pair features (Catalyst + Java string kernels) ▷
+                linear / learned score
     clusters  → edges (score ≥ τ) → large-star/small-star connected
                 components → id restore (cluster_id = min member id)
 

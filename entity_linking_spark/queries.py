@@ -251,8 +251,8 @@ def candidate_pairs_pfx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pair_scores_lev_cost2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost-2 Levenshtein ratio inside blocks — the reference's exact
     ``Levenshtein.ratio`` semantics (substitution cost 2,
-    /root/reference/src/simple_dataset.py:180-181), Arrow pandas UDF on
-    the Spark side. The oracle computes LCS independently via a
+    /root/reference/src/simple_dataset.py:180-181), a Java kernel on
+    the Spark side (``functions/StringKernels.java``). The oracle computes LCS independently via a
     recursive-CTE dynamic program (ratio = 2·LCS/lensum), so the fidelity
     variant is value-checked, not just pytest-golden."""
     docs = _t(spark, sf_dir, "documents")
@@ -351,8 +351,8 @@ def pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     - Levenshtein similarity (unit-cost ratio, JVM builtin — reference
       candidate_mention_sim, /root/reference/src/simple_dataset.py:180-181;
       cost-2 fidelity variant is oracle-checked in pair_scores_lev_cost2),
-    - Jaro-Winkler (north_star-required measure) via an Arrow-batched
-      pandas UDF bit-matched to DuckDB's implementation,
+    - Jaro-Winkler (north_star-required measure) via a Java kernel
+      bit-matched to DuckDB's implementation,
     - emb_dot / emb_cos — pooled document-embedding similarity (round-5:
       the reference's wiki2vec pair features, src/simple_dataset.py:197-203
       with _f_to_vec pooling at :133-144; north star "embedding

@@ -55,8 +55,9 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         # AQE coalescing is byte-based and cannot see per-row compute cost:
         # with the default 1MB minPartitionSize a ~1MB pair-scoring stage
-        # coalesces to ONE task and the Arrow UDF work serializes (measured
-        # 4.1s single-task stage at sf0.1). A 64k floor keeps cheap-bytes/
+        # coalesces to ONE task and the per-pair string-similarity work
+        # serializes (a 4.1s single-task stage at sf0.1, measured when
+        # Jaro-Winkler was a Python UDF). A 64k floor keeps cheap-bytes/
         # expensive-compute stages wide; at real scale partitions are far
         # above 1MB and this floor is inert.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")

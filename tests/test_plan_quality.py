@@ -2,7 +2,7 @@
 
 These assert what `.explain` shows — filters reaching the parquet scan
 (PushedFilters), column pruning (ReadSchema), broadcast joins for dims,
-and no Python row-at-a-time UDFs (only ArrowEvalPython / codegen stages)
+and no Python row-at-a-time UDFs (the pair scores run in the JVM)
 — so a regression that silently de-optimizes a plan fails CI, not a
 production run.
 """
@@ -39,12 +39,14 @@ def test_dim_join_broadcasts(spark, sf_dir):
 
 
 def test_no_row_at_a_time_python(spark, sf_dir):
-    # pair_scores uses the Jaro-Winkler UDF: must be Arrow-batched
-    # (ArrowEvalPython), never BatchEvalPython (per-row pickling)
+    # pair_scores uses Jaro-Winkler, a JVM kernel: no Python eval node of
+    # either kind (BatchEvalPython pickles per row; ArrowEvalPython ships
+    # Arrow batches through a Python worker)
     df = queries()["pair_scores"](spark, sf_dir)
     plan = _plan(df)
     assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
+    assert "ArrowEvalPython" not in plan
+    assert "jaro_winkler(" in plan
 
 
 def test_semi_join_stays_semi(spark, sf_dir):

@@ -4,10 +4,7 @@ invariants that hold for ALL inputs, complementing the point goldens."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from entity_linking_spark.functions.similarity import (
-    _jaro_winkler_one,
-    _lev_ratio_cost2_one,
-)
+from similarity_reference import _jaro_winkler_one, _lev_ratio_cost2_one
 from entity_linking_spark.tokenize import parse_for_tokens, split_token_on
 
 short_text = st.text(

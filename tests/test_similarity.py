@@ -18,12 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_linking_spark.functions.similarity import (
-    _jaro_winkler_one,
-    _lev_ratio_cost2_one,
     cosine_arrays,
     lev_ratio_unit,
     tfidf_cosine_maps,
 )
+from similarity_reference import _jaro_winkler_one, _lev_ratio_cost2_one
 
 
 # Golden values computed from python-Levenshtein semantics:
