@@ -8,8 +8,9 @@ sandbox image carries no Iceberg jars. The interface is format-agnostic:
 swap the write in ``stage`` and ``_read`` for
 ``df.writeTo(table).createOrReplace()`` and the resume logic is unchanged.
 
-Each stage costs one write job and one manifest save: the stage's row
-count comes from an ``Observation`` on the write job itself, and the
+Each stage costs one write job and one manifest save (a bucketed stage
+may add the shuffle that clusters it on its bucket columns): the stage's
+row count comes from an ``Observation`` on the write job itself, and the
 manifest is the only record beside the stage's files. Per-partition
 counters are derived on demand by ``StageCheckpointer.metrics()`` from the
 stages as a resumed run reads them.
@@ -133,15 +134,18 @@ class StageCheckpointer:
         whose recorded digest differs — changed params force a rebuild.
 
         ``bucket_by`` writes the stage as a BUCKETED table sorted on the
-        bucket columns (``num_buckets`` defaults to the default
-        parallelism). Its scan reports ``hashpartitioning`` on those
-        columns, so a later equi-join on them needs no exchange on this
-        side (BENCH/BASELINE.md: scheduled hash-exchanges 2→1 on the
-        scored stage). The files live under the same ``stage_<name>``
-        path as a plain stage (``saveAsTable`` with an explicit LOCATION),
-        and the bucket spec is in the manifest, so a new session resuming
-        the run_dir re-registers the table and keeps the exchange-free
-        scan.
+        bucket columns (``num_buckets`` defaults to
+        ``spark.sql.shuffle.partitions``). Its scan reports
+        ``hashpartitioning`` on those columns, so a later equi-join on
+        them needs no exchange on this side (BENCH/BASELINE.md: scheduled
+        hash-exchanges 2→1 on the scored stage). The files live under the
+        same ``stage_<name>`` path as a plain stage (``saveAsTable`` with
+        an explicit LOCATION), and the bucket spec is in the manifest, so a
+        new session resuming the run_dir re-registers the table and keeps
+        the exchange-free scan. The write hash-partitions on the bucket
+        columns first, so a bucketed stage holds at most ``num_buckets``
+        files; that costs one shuffle job unless the frame is already
+        hash-partitioned on them.
 
         One write job per stage: the manifest's ``rows`` is an
         ``Observation`` on that job, and completion, ``rows``, ``digest``,
@@ -156,23 +160,25 @@ class StageCheckpointer:
         spec: dict = {}
         t0 = time.time()
         if bb:
-            nb = num_buckets or self.spark.sparkContext.defaultParallelism
+            # as many buckets as shuffle partitions: a stage that already
+            # ends hash-partitioned on its bucket columns needs no shuffle
+            # for the repartition below
+            nb = num_buckets or int(
+                self.spark.conf.get("spark.sql.shuffle.partitions")
+            )
             tbl = self._table(name)
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            # one task per bucket: each writes one file, where an
+            # unpartitioned write has every task write every bucket
             (
-                df.write.mode("overwrite")
+                df.repartition(nb, *bb)
+                .write.mode("overwrite")
                 .option("path", path)
                 .bucketBy(nb, *bb)
                 .sortBy(*bb)
                 .saveAsTable(tbl)
             )
-            spec = {
-                "schema_ddl": ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-                ),
-                "num_buckets": nb,
-                "bucket_by": bb,
-            }
+            spec = {"num_buckets": nb, "bucket_by": bb}
         else:
             df.write.mode("overwrite").parquet(path)
         self.manifest[name] = {
@@ -181,6 +187,9 @@ class StageCheckpointer:
             "seconds": round(time.time() - t0, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "schema": df.schema.simpleString(),
+            "schema_ddl": ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+            ),
             "digest": digest,
             **spec,
         }
@@ -191,7 +200,11 @@ class StageCheckpointer:
         """The completed stage as a later stage (or a resumed run) reads it."""
         e = self.manifest[name]
         if "bucket_by" not in e:
-            return self.spark.read.parquet(self._stage_path(name))
+            reader = self.spark.read
+            if "schema_ddl" in e:  # absent from manifests of older versions
+                # a given schema spares the job that infers it from the files
+                reader = reader.schema(e["schema_ddl"])
+            return reader.parquet(self._stage_path(name))
         tbl = self._table(name)
         if not self.spark.catalog.tableExists(tbl):
             cols = ", ".join(e["bucket_by"])

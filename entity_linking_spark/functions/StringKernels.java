@@ -1,18 +1,19 @@
-// String-similarity kernels that run inside the JVM as Spark UDFs.
+// Kernels that run inside the JVM as Spark UDFs: two string-similarity
+// measures and a union-find labelling of connected components.
 //
 // Compiled at run time by Janino (org.codehaus.janino.SimpleCompiler, the
 // compiler Spark uses for whole-stage codegen), so the source is written in
-// the subset Janino accepts: no generics and no lambdas. Every measure works
-// on code points (String.codePoints()), so a character outside the BMP
-// counts once, as it does in Python and DuckDB. A null input reads as "" and
-// the result is never null.
+// the subset Janino accepts: no generics and no lambdas.
 //
-// Each kernel follows its Python reference (tests/similarity_reference.py)
-// step for step, including the order of the double arithmetic, so the two
-// agree bit for bit.
+// The string measures work on code points (String.codePoints()), so a
+// character outside the BMP counts once, as it does in Python and DuckDB. A
+// null input reads as "" and the result is never null. Each follows its
+// Python reference (tests/similarity_reference.py) step for step, including
+// the order of the double arithmetic, so the two agree bit for bit.
 
 package entity_linking_spark.functions;
 
+import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF2;
 
 public class StringKernels {
@@ -113,6 +114,70 @@ public class StringKernels {
             }
             int lcs = prev[lb];
             return Double.valueOf((double) (lensum - (lensum - 2 * lcs)) / lensum);
+        }
+    }
+
+    // Root of node i, halving the path on the way up.
+    static int find(int[] parent, int i) {
+        while (parent[i] != i) {
+            parent[i] = parent[parent[i]];
+            i = parent[i];
+        }
+        return i;
+    }
+
+    static long[] longs(Object seq) {
+        scala.collection.Seq s = (scala.collection.Seq) seq;
+        long[] out = new long[s.length()];
+        scala.collection.Iterator it = s.iterator();
+        for (int i = 0; i < out.length; i++) {
+            out[i] = ((Long) it.next()).longValue();
+        }
+        return out;
+    }
+
+    // Connected components of an edge list: takes the edges' source and
+    // destination ids as two arrays of equal length and returns one
+    // (node, component) struct per distinct node, where component is the
+    // smallest id in the node's component, compared as signed longs.
+    public static class UnionFind implements UDF2 {
+        public Object call(Object x, Object y) {
+            long[] src = longs(x);
+            long[] dst = longs(y);
+            int m = src.length;
+            // the distinct ids in ascending order; node i is ids[i]
+            long[] ids = new long[2 * m];
+            System.arraycopy(src, 0, ids, 0, m);
+            System.arraycopy(dst, 0, ids, m, m);
+            java.util.Arrays.sort(ids);
+            int n = 0;
+            for (int i = 0; i < ids.length; i++) {
+                if (n == 0 || ids[i] != ids[n - 1]) {
+                    ids[n] = ids[i];
+                    n++;
+                }
+            }
+            // every root is the smallest node of its tree, so a component's
+            // root is its minimum id
+            int[] parent = new int[n];
+            for (int i = 0; i < n; i++) {
+                parent[i] = i;
+            }
+            for (int e = 0; e < m; e++) {
+                int a = find(parent, java.util.Arrays.binarySearch(ids, 0, n, src[e]));
+                int b = find(parent, java.util.Arrays.binarySearch(ids, 0, n, dst[e]));
+                if (a < b) {
+                    parent[b] = a;
+                } else if (b < a) {
+                    parent[a] = b;
+                }
+            }
+            Object[] out = new Object[n];
+            for (int i = 0; i < n; i++) {
+                out[i] = RowFactory.create(
+                    new Object[] {Long.valueOf(ids[i]), Long.valueOf(ids[find(parent, i)])});
+            }
+            return out;
         }
     }
 }

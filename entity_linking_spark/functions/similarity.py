@@ -4,6 +4,8 @@ Spark builtins where Spark has the measure (Levenshtein, array/map algebra
 for cosine). The two measures Spark lacks, Levenshtein *ratio* with
 substitution-cost-2 semantics and Jaro-Winkler, are JVM kernels in
 ``StringKernels.java``, called as Spark UDFs. No row crosses into Python.
+The same compilation unit carries ``union_find``, the one-task finish of
+``operators.cluster.connected_components``.
 
 Why kernels, and why Janino: a Python UDF's cost is mostly the boundary
 (Arrow batches shipped to a Python worker and back), not the function
@@ -114,7 +116,12 @@ def tfidf_cosine_maps(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 _KERNEL_SOURCE = Path(__file__).with_name("StringKernels.java")
-_KERNELS = {"jaro_winkler": "JaroWinkler", "lev_ratio_cost2": "LevRatioCost2"}
+# name → (class in StringKernels.java, return type as a DDL string)
+_KERNELS = {
+    "jaro_winkler": ("JaroWinkler", "double"),
+    "lev_ratio_cost2": ("LevRatioCost2", "double"),
+    "union_find": ("UnionFind", "array<struct<node: bigint, component: bigint>>"),
+}
 
 _lock = threading.Lock()
 _loaded_for: tuple[str, int] | None = None
@@ -155,7 +162,7 @@ def _compile_kernels(sc: SparkContext) -> dict[str, JavaObject]:
     no_params = gateway.new_array(Class, 0)
     no_args = gateway.new_array(jvm.java.lang.Object, 0)
     udfs = {}
-    for name, cls in _KERNELS.items():
+    for name, (cls, ddl) in _KERNELS.items():
         kernel = (
             loader.loadClass(f"entity_linking_spark.functions.StringKernels${cls}")
             .getDeclaredConstructor(no_params)
@@ -163,7 +170,7 @@ def _compile_kernels(sc: SparkContext) -> dict[str, JavaObject]:
         )
         args = gateway.new_array(jvm.java.lang.Object, 2)
         args[0] = kernel
-        args[1] = jvm.org.apache.spark.sql.types.DataTypes.DoubleType
+        args[1] = jvm.org.apache.spark.sql.types.DataType.fromDDL(ddl)
         udfs[name] = java_udf.invoke(None, args).withName(name)
     return udfs
 
@@ -188,3 +195,10 @@ def lev_ratio_cost2(a: Column | str, b: Column | str) -> Column:
 def jaro_winkler(a: Column | str, b: Column | str) -> Column:
     """DuckDB's ``jaro_winkler_similarity``, as a double; null reads as ""."""
     return _kernel("jaro_winkler", a, b)
+
+
+def union_find(src: Column | str, dst: Column | str) -> Column:
+    """Connected components of the edges in two aligned ``array<bigint>``
+    columns → ``array<struct<node, component>>``, one entry per distinct
+    node, component = the component's minimum id (signed order)."""
+    return _kernel("union_find", src, dst)

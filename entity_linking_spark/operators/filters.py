@@ -45,18 +45,10 @@ def filter_has_label(
 def record_drop_metrics(
     ckpt, stage: str, observation: Observation
 ) -> None:
-    """Write an Observation's drop counts into a ``StageCheckpointer``'s
-    ``_metrics`` table (one tiny idempotent overwrite per stage) — the
-    durable form of the reference's printed counts."""
-    import os
-
-    rows = [
-        (stage, k, int(v)) for k, v in observation.get.items()
-    ]
-    # explicit schema: keeps the _metrics table type-stable even when the
-    # observation map is empty or partially populated
-    ckpt.spark.createDataFrame(
-        rows, "stage string, metric string, value bigint"
-    ).write.mode("overwrite").parquet(
-        os.path.join(ckpt.base_dir, "_metrics", f"stage={stage}_drops")
-    )
+    """Record an Observation's drop counts as ``drops`` in a
+    ``StageCheckpointer``'s manifest entry for ``stage`` (one manifest
+    save) — the durable form of the reference's printed counts. Call it
+    after the stage is written: writing a stage replaces its entry."""
+    entry = ckpt.manifest.setdefault(stage, {})
+    entry["drops"] = {k: int(v) for k, v in observation.get.items()}
+    ckpt._save_manifest()

@@ -262,7 +262,11 @@ def pair_payload_half(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     cols = ["head", "token_cnt", "tfidf"] + (
         ["emb"] if "emb" in payload.columns else []
     )
-    return attach_pair_payload(pairs, payload, "id", cols, sides=("a",))
+    # a sort-merge join reads both bucketed sides as they lie, where a
+    # broadcast of the pairs costs a job of its own
+    return attach_pair_payload(
+        pairs.hint("merge"), payload, "id", cols, sides=("a",)
+    )
 
 
 def pair_features(pairs: DataFrame, payload: DataFrame) -> DataFrame:

@@ -11,8 +11,10 @@ One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
     [pairs_payload_a] → pairs with the id_a-side payload attached
     scored    → JVM pair features (Catalyst + Java string kernels) ▷
                 linear / learned score
-    clusters  → edges (score ≥ τ) → large-star/small-star connected
-                components → id restore (cluster_id = min member id)
+    clusters  → edges (score ≥ τ) → connected components (one-task
+                union-find kernel up to ``LOCAL_MAX_EDGES`` edges, else
+                large-star/small-star rounds) → id restore (cluster_id =
+                min member id)
 
 Every runner is the same graph with its own materialization callback:
 ``link_pages`` persists ``pages``, ``blocks`` and ``payload`` in memory;

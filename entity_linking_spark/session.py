@@ -67,6 +67,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Tungsten memory page size. With an 8g driver the default is the
+        # 64 MB cap, and a broadcast hash relation on a non-long key holds
+        # at least one page in the driver until the ContextCleaner drops
+        # the broadcast: two string-keyed broadcasts of a few hundred rows
+        # in blocking held 128 MB there (heap dump, giant_component). A
+        # larger buffer still gets as many pages as it needs.
+        .config("spark.buffer.pageSize", "4m")
         # the codegen cache is an LRU keyed by (class loader, code), and in
         # local mode each whole-stage class is compiled under both the
         # driver's and the executor's loader. One link_pages run needs

@@ -10,9 +10,13 @@ import math
 import random
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Row
 
-from entity_linking_spark.operators.cluster import connected_components
+from entity_linking_spark.operators import cluster
+from entity_linking_spark.operators.cluster import (
+    LOCAL_MAX_EDGES,
+    connected_components,
+)
 
 
 def _union_find(n_nodes, edges):
@@ -36,12 +40,14 @@ def _union_find(n_nodes, edges):
     return {x: find(x) for x in parent}
 
 
-def _check(spark, edges, **cc_kwargs):
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, **cc_kwargs).collect()
-    }
+def _check(
+    spark, edges, schema="src long, dst long", bounds=(LOCAL_MAX_EDGES, 0),
+    **cc_kwargs,
+):
+    """Labels equal the oracle's with the local finish at each of
+    ``bounds``: by default once at the module's bound and once at 0, which
+    sends every edge set through the star rounds."""
+    df = spark.createDataFrame(edges, schema)
     exp = _union_find(None, edges)
     # union-find roots are the min of each component because union() always
     # parents the larger root — still normalize via a second pass
@@ -50,7 +56,19 @@ def _check(spark, edges, **cc_kwargs):
         comp_min.setdefault(root, node)
         comp_min[root] = min(comp_min[root], node)
     exp_norm = {node: comp_min[root] for node, root in exp.items()}
-    assert got == exp_norm
+    for bound in bounds:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cluster, "LOCAL_MAX_EDGES", bound)
+            got = {
+                _key(r["node"]): _key(r["component"])
+                for r in connected_components(df, **cc_kwargs).collect()
+            }
+        assert got == exp_norm, bound
+
+
+def _key(v):
+    """A struct id as the tuple the oracle compares field by field."""
+    return tuple(v) if isinstance(v, Row) else v
 
 
 def test_chain(spark):
@@ -65,6 +83,44 @@ def test_two_components_and_star(spark):
 
 def test_self_loops_and_dups(spark):
     _check(spark, [(1, 1), (1, 2), (2, 1), (2, 3), (5, 5)])
+
+
+def test_empty_edge_set(spark):
+    _check(spark, [])
+
+
+def test_null_ends(spark):
+    # an edge with one null end leaves its other end a node; both paths
+    # label every non-null node alike
+    df = spark.createDataFrame(
+        [(1, None), (None, None), (2, 3), (None, 4), (4, 5)], "src long, dst long"
+    )
+    for bound in (LOCAL_MAX_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cluster, "LOCAL_MAX_EDGES", bound)
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(df).collect()
+                if r["node"] is not None
+            }
+        assert got == {1: 1, 2: 2, 3: 2, 4: 4, 5: 4}, bound
+
+
+def test_signed_ids(spark):
+    # components take the minimum id in signed order, on both paths
+    _check(spark, [(-5, 3), (3, 2**62), (-(2**63), 7), (7, 2**63 - 1), (0, 0)])
+
+
+def test_struct_ids(spark):
+    # 128-bit working ids: struct<h1, h2>, ordered field by field (as
+    # Spark's least orders structs), at both bounds
+    rng = random.Random(5)
+    ids = [(rng.randrange(-3, 3), rng.randrange(-(2**63), 2**63)) for _ in range(40)]
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(50)]
+    _check(
+        spark, edges,
+        "src struct<h1: bigint, h2: bigint>, dst struct<h1: bigint, h2: bigint>",
+    )
 
 
 @pytest.mark.parametrize(
@@ -106,8 +162,6 @@ def test_star_forest_accepted(spark):
 
 
 def _count_rounds(spark, monkeypatch, edges):
-    from entity_linking_spark.operators import cluster
-
     calls = {"n": 0}
     small_star = cluster._small_star
 
@@ -116,7 +170,8 @@ def _count_rounds(spark, monkeypatch, edges):
         return small_star(e)
 
     monkeypatch.setattr(cluster, "_small_star", counting)
-    _check(spark, edges, fuse_rounds=1)
+    # bound 0: the star rounds label every edge set
+    _check(spark, edges, bounds=(0,), fuse_rounds=1)
     return calls["n"]
 
 
@@ -139,11 +194,12 @@ def test_chain_rounds_logarithmic(spark, monkeypatch, n, shuffled):
     assert rounds <= math.ceil(math.log2(n)) + 1, rounds
 
 
-def test_superseded_rounds_released(spark):
+def test_superseded_rounds_released(spark, monkeypatch):
     # only raw and the final edge set stay persisted (the lazy result reads
     # them): the persisted-RDD count a call leaves must not grow with the
     # number of rounds (counted by id: the ContextCleaner may drop older
     # frames meanwhile)
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
     jsc = spark.sparkContext._jsc
 
     def delta(n):
@@ -159,17 +215,35 @@ def test_superseded_rounds_released(spark):
     assert delta(2048) == delta(3)
 
 
+def test_local_finish_jobs(spark, monkeypatch):
+    # under the bound: the raw checkpoint and one gather job; at bound 0 a
+    # 512-node chain takes a job per probe of the star rounds
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(511)], "src long, dst long"
+    )
+
+    def jobs():
+        j0 = scheduler.nextJobId()
+        assert len(connected_components(df).collect()) == 512
+        return scheduler.nextJobId() - j0
+
+    assert jobs() <= 3
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
+    assert jobs() > 3
+
+
 def test_singleton_nodes_kept(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     out = connected_components(df)
     assert out.count() == 2
 
 
-def test_unconverged_warns(spark):
+def test_unconverged_warns(spark, monkeypatch):
     import warnings
 
-    from entity_linking_spark.operators.cluster import connected_components
-
+    # bound 0: only the star rounds iterate, so only they can stop short
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], "src long, dst long"
     )
@@ -179,37 +253,41 @@ def test_unconverged_warns(spark):
     assert any("fixpoint" in str(w.message) for w in rec)
 
 
-def test_reliable_checkpoint_dir(spark, tmp_path):
+def test_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     # checkpoint_dir switches localCheckpoint → reliable checkpoint: the
-    # result is identical and checkpoint files land under the given dir
+    # result is identical and checkpoint files land under the given dir,
+    # on the local finish and on the star rounds (bound 0)
     import os
 
     edges = [(i, i + 1) for i in range(15)] + [(100, 101)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    ckdir = str(tmp_path / "cc_ckpt")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, checkpoint_dir=ckdir).collect()
-    }
-    exp = {i: 0 for i in range(16)} | {100: 100, 101: 100}
-    assert got == exp
-    # reliable checkpoints were actually written to the shared dir
-    found = [
-        f for root, _, files in os.walk(ckdir) for f in files
-    ]
-    assert found, "no checkpoint files written to checkpoint_dir"
-    # superseded round checkpoints are deleted (round-4 advice): only the
-    # live set remains — raw + the final edge set — not O(rounds) copies
-    rdd_dirs = [
-        d for root, dirs, _ in os.walk(ckdir) for d in dirs
-        if d.startswith("rdd-")
-    ]
-    assert len(rdd_dirs) <= 2, rdd_dirs
-    # the session checkpoint dir is handed back (no global clobber)
-    opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert not (opt.isDefined() and "cc_ckpt" in opt.get()), (
-        "connected_components left its checkpoint dir set on the context"
-    )
+    for bound in (LOCAL_MAX_EDGES, 0):
+        monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", bound)
+        ckdir = str(tmp_path / f"cc_ckpt{bound}")
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(df, checkpoint_dir=ckdir).collect()
+        }
+        exp = {i: 0 for i in range(16)} | {100: 100, 101: 100}
+        assert got == exp, bound
+        # reliable checkpoints were actually written to the shared dir
+        found = [
+            f for root, _, files in os.walk(ckdir) for f in files
+        ]
+        assert found, "no checkpoint files written to checkpoint_dir"
+        # superseded round checkpoints are deleted (round-4 advice): only
+        # the live set remains — raw + the final edge set — not O(rounds)
+        # copies
+        rdd_dirs = [
+            d for root, dirs, _ in os.walk(ckdir) for d in dirs
+            if d.startswith("rdd-")
+        ]
+        assert len(rdd_dirs) <= 2, rdd_dirs
+        # the session checkpoint dir is handed back (no global clobber)
+        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
+        assert not (opt.isDefined() and "cc_ckpt" in opt.get()), (
+            "connected_components left its checkpoint dir set on the context"
+        )
 
 
 @pytest.mark.parametrize("fuse_rounds", [1, 2, 3])

@@ -1,5 +1,7 @@
 """P2 has-label filter: row semantics + drop counters with zero extra jobs."""
 
+import os
+
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -88,12 +90,16 @@ def test_record_drop_metrics_writes_metric_rows(spark, tmp_path):
     kept = filter_has_label(df, "candidates", "label", observation=obs)
     kept.count()
     ckpt = StageCheckpointer(spark, str(tmp_path / "run"))
+    ckpt.stage("label_filter", lambda: kept)
     record_drop_metrics(ckpt, "label_filter", obs)
-    out = spark.read.parquet(
-        str(tmp_path / "run" / "_metrics" / "stage=label_filter_drops")
-    )
-    vals = {r["metric"]: r["value"] for r in out.collect()}
-    assert vals == {"seen": 2, "dropped": 1, "kept": 1}
+    # the counters are in the manifest a resumed run reads, beside the
+    # stage's own entry, and nowhere else
+    entry = StageCheckpointer(spark, str(tmp_path / "run")).manifest["label_filter"]
+    assert entry["drops"] == {"seen": 2, "dropped": 1, "kept": 1}
+    assert entry["complete"] and entry["rows"] == 1
+    assert sorted(os.listdir(tmp_path / "run")) == [
+        "manifest.json", "stage_label_filter",
+    ]
 
 
 def test_bag_of_nouns_heuristic(spark):

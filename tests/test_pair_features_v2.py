@@ -249,6 +249,25 @@ def test_id_bits_128_parity(corpus):
     assert a == b
 
 
+def test_id_bits_128_parity_star_rounds(corpus, monkeypatch):
+    # the 64-bit ids' edge set takes the one-task union-find at the
+    # default bound; at bound 0 both id widths take the star rounds
+    from entity_linking_spark.operators import cluster
+
+    pages, _ = corpus
+    local = {
+        (r["id"], r["cluster_id"])
+        for r in link_pages(pages, config=LinkageConfig()).collect()
+    }
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
+    for bits in (64, 128):
+        got = {
+            (r["id"], r["cluster_id"])
+            for r in link_pages(pages, config=LinkageConfig(id_bits=bits)).collect()
+        }
+        assert got == local, bits
+
+
 def test_pooled_embedding_shuffle_join_parity(spark, tiny):
     # emb_broadcast=False (vocabularies too big for executor memory)
     # switches the vector join to a token-keyed shuffle — values identical

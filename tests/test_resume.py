@@ -333,9 +333,10 @@ def test_dual_bucket_scored_stage_zero_exchanges(spark, tmp_path):
 
 
 def test_metrics_beside_drop_counters(spark, tmp_path):
-    # record_drop_metrics writes (stage, metric, value) files under the
-    # run dir; a stage that sorts after them must still report its own
-    # per-partition rows, summing to the manifest count
+    # record_drop_metrics puts its counters in the manifest, under an
+    # entry that names no written stage; metrics() skips that entry, and a
+    # stage that sorts after it still reports its own per-partition rows,
+    # summing to the manifest count
     from pyspark.sql import Observation
 
     from entity_linking_spark.operators.filters import (
@@ -432,3 +433,34 @@ def test_bucketed_blocks_self_join_plans_no_block_key_shuffle(
             assert "hashpartitioning(block_key" not in plan, plan
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("layout", ["bucketed", "dual"])
+def test_bucketed_stages_one_file_per_bucket(spark, corpus, tmp_path, layout):
+    # each bucketed stage is hash-partitioned on its bucket columns before
+    # the write, so it holds at most num_buckets files, not one per
+    # (write task, bucket)
+    run_dir = tmp_path / "files"
+    run_linkage_checkpointed(spark, corpus, str(run_dir), **LAYOUTS[layout]).count()
+    with open(run_dir / "manifest.json") as fh:
+        manifest = json.load(fh)
+    bucketed = {n: e for n, e in manifest.items() if "bucket_by" in e}
+    assert len(bucketed) == (4 if layout == "dual" else 3)
+    for name, e in bucketed.items():
+        files = [
+            f for f in os.listdir(run_dir / f"stage_{name}")
+            if f.endswith(".parquet")
+        ]
+        assert 0 < len(files) <= e["num_buckets"], (name, len(files))
+
+
+def test_link_pages_persisted_rdds(spark, corpus):
+    # link_pages leaves pages, blocks and payload persisted, plus the CC
+    # edge checkpoint its lazy result reads; the local finish keeps no
+    # final edge set of star rounds
+    _clean_slate(spark)
+    out = link_pages(corpus)
+    out.collect()
+    left = len(spark.sparkContext._jsc.getPersistentRDDs())
+    _clean_slate(spark)
+    assert left == 4
