@@ -264,7 +264,7 @@ def run_linkage_checkpointed(
     input widening, the same int64/128-bit working-id fold and the same
     id restore, so the clusters equal ``link_pages``' for one config
     (tests/test_resume.py). Only the materialization differs: ``blocks``,
-    ``pairs``, ``payload``, ``scored`` and ``clusters`` are written as
+    ``payload``, ``pairs``, ``scored`` and ``clusters`` are written as
     checkpoints, one write job each. Killing the job after any stage and
     re-running reuses all completed stages (tests/test_resume.py proves
     identical output either way). Stages carry working ids; a run_dir
@@ -278,14 +278,17 @@ def run_linkage_checkpointed(
     False for plain-parquet stages (portable to engines that cannot read
     Spark bucket metadata).
 
-    ``dual_bucket`` (requires ``bucketed``): additionally persist a
+    ``dual_bucket`` (requires ``bucketed``): a layout of this runner's
+    callback, not of the stage graph. Right after ``pairs`` it writes a
     ``pairs_payload_a`` stage — pairs with prior features + the id_a-side
-    payload attached — bucketed on ``id_b``. Building it is exchange-free
-    (pairs bucketed id_a ⋈ payload bucketed id), its WRITE performs the
-    id_b re-key once, and the scored stage then schedules ZERO exchanges
-    (single-bucket stops at 1). Same cold-run data movement, but the
-    re-key becomes a compressed resumable stage instead of a transient
-    shuffle, and a resumed run re-enters scoring with no exchange at all.
+    payload attached (``scoring.pair_payload_half``) — bucketed on
+    ``id_b``, and hands that stage to ``scored`` as its pairs. Building it
+    is exchange-free (pairs bucketed id_a ⋈ payload bucketed id), its
+    WRITE performs the id_b re-key once, and the scored stage then
+    schedules ZERO exchanges (single-bucket stops at 1). Same cold-run
+    data movement, but the re-key becomes a compressed resumable stage
+    instead of a transient shuffle, and a resumed run re-enters scoring
+    with no exchange at all.
 
     Config knobs that change a persisted stage's SCHEMA are honored and
     digest-covered here: ``cfg.hash_tokens`` (payload tfidf
@@ -295,6 +298,7 @@ def run_linkage_checkpointed(
     vector). The embeddings TABLE itself is not digested — keep it stable
     for the lifetime of a run_dir (or change run_dir when it changes).
     """
+    from entity_linking_spark.operators.scoring import pair_payload_half
     from entity_linking_spark.plans.pipeline import LinkageConfig, _run_stages
 
     if dual_bucket and not bucketed:
@@ -310,24 +314,34 @@ def run_linkage_checkpointed(
             "id_col": id_col,
             "text_col": text_col,
             "url_col": url_col,
-            "pipeline_version": 5,
+            "pipeline_version": 6,
             # layout change invalidates stages written the other way
             "bucketed": bucketed,
             "dual_bucket": dual_bucket,
         }
     )
     buckets = (
-        {"blocks": "block_key", "pairs": "id_a", "payload": "id",
-         "pairs_payload_a": "id_b"}
+        {"blocks": "block_key", "pairs": "id_a", "payload": "id"}
         if bucketed else {}
     )
+    written: dict[str, DataFrame] = {}
 
     def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         if name == "pages":
             return build()  # the input itself: re-read on resume
-        return ckpt.stage(name, build, digest=dig, bucket_by=buckets.get(name))
+        df = written[name] = ckpt.stage(
+            name, build, digest=dig, bucket_by=buckets.get(name)
+        )
+        if name == "pairs" and dual_bucket:
+            # the graph builds payload before pairs, so it is written here
+            return ckpt.stage(
+                "pairs_payload_a",
+                lambda: pair_payload_half(df, written["payload"]),
+                digest=dig,
+                bucket_by="id_b",
+            )
+        return df
 
     return _run_stages(
-        pages, stage, cfg, id_col, text_col, url_col,
-        embeddings=embeddings, dual_bucket=dual_bucket,
+        pages, stage, cfg, id_col, text_col, url_col, embeddings=embeddings
     )

@@ -106,10 +106,6 @@ def tfidf_norm_map(a: Column) -> Column:
     )
 
 
-def tfidf_cosine_maps(a: Column, b: Column) -> Column:
-    denom = tfidf_norm_map(a) * tfidf_norm_map(b)
-    return F.when(denom == 0, F.lit(0.0)).otherwise(tfidf_dot_maps(a, b) / denom)
-
 
 # ---------------------------------------------------------------------------
 # JVM kernels (measures Spark lacks), compiled from StringKernels.java

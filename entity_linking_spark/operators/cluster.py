@@ -110,14 +110,10 @@ def _label_in_one_task(raw: DataFrame) -> DataFrame:
     """(node, component) for every node of ``raw``'s edges, from one task:
     ``coalesce(1)`` puts the edge lists and the union-find kernel in the
     same task, so this adds no shuffle and one job. A node seen only in a
-    self-loop is a singleton component."""
-    # collect_list skips nulls, which would misalign the two lists: an
-    # edge with one null end keeps its other end as a self-loop
-    src, dst = F.col("src"), F.col("dst")
+    self-loop is a singleton component. ``raw`` holds no null end, so
+    the two lists ``collect_list`` builds stay aligned."""
     return (
-        raw.select(F.coalesce(src, dst).alias("src"), F.coalesce(dst, src).alias("dst"))
-        .where(F.col("src").isNotNull())
-        .coalesce(1)
+        raw.coalesce(1)
         .agg(F.collect_list("src").alias("src"), F.collect_list("dst").alias("dst"))
         .select(F.inline(union_find("src", "dst")))
     )
@@ -139,7 +135,8 @@ def connected_components(
     union-find kernel (``_label_in_one_task``): no rounds, so
     ``max_iter`` and ``fuse_rounds`` do not apply. Larger edge sets, and
     ids of any other type, take the star rounds, the scale path described
-    below. Both paths give the same labels.
+    below. Both paths give the same labels. An edge with one null end
+    counts as a self-loop on its other end; a null–null edge is dropped.
 
     Convergence: star rounds preserve connectivity, and a forest of stars
     whose leaves are all larger than their root is both their fixpoint and
@@ -227,12 +224,14 @@ def connected_components(
         # materialize the incoming edge plan ONCE — deriving nodes and the
         # working edge set from the raw lazy plan would execute the whole
         # upstream (blocking + scoring) twice. The observation counts the
-        # edges on that same job.
+        # edges on that same job. Both paths read the null rule applied
+        # here (see the docstring).
+        s, d = F.col(src), F.col(dst)
         n_edges = Observation()
         raw = _ckpt(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).observe(
-                n_edges, F.count(F.lit(1)).alias("edges")
-            ),
+            edges.select(F.coalesce(s, d).alias("src"), F.coalesce(d, s).alias("dst"))
+            .where(F.col("src").isNotNull())
+            .observe(n_edges, F.count(F.lit(1)).alias("edges")),
             True,
         )
         if n_edges.get["edges"] <= LOCAL_MAX_EDGES and all(

@@ -31,7 +31,7 @@ from entity_linking_spark.functions.similarity import (
     dot_arrays,
     jaro_winkler,
     lev_ratio_unit,
-    tfidf_cosine_maps,
+    tfidf_dot_maps,
     tfidf_norm_map,
 )
 from entity_linking_spark.functions.text import words
@@ -47,6 +47,46 @@ DEFAULT_WEIGHTS: dict[str, float] = {
 }
 
 
+def tf_idf(
+    pages: DataFrame, id_col: str = "url", text_col: str = "text"
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus's term counts and IDF → ``(tf, idf)``.
+
+    ``tf`` is ``(id, token, tf)``, one row per distinct token of a page;
+    ``idf`` is ``(token, df, idf)`` with ``idf = log(N/df)`` (reference
+    builds it in preprocessing and loads JSON — ``src/simple_dataset.py:
+    62-63``, ``src/create_compats.py:101-108``).
+
+    N (the corpus size) is folded INTO the plan as a 1-row aggregate
+    cross-joined (broadcast) into the IDF build — no driver-side
+    ``count()`` pre-pass, so constructing these frames launches zero jobs
+    and the corpus is scanned once, not twice.
+    """
+    tf = (
+        pages.select(
+            F.col(id_col).alias("id"),
+            F.explode(words(F.col(text_col))).alias("token"),
+        )
+        .groupBy("id", "token")
+        .agg(F.count("*").alias("tf"))
+    )
+    # 1-row corpus count: metadata-cheap scan, stays inside the plan
+    n = pages.select(F.col(id_col)).agg(F.count("*").alias("_n_docs"))
+    # tf rows are unique per (id, token), so count(*) == docs containing
+    # the token — no countDistinct dedup pass needed
+    idf = (
+        tf.groupBy("token")
+        .agg(F.count("*").alias("df"))
+        .crossJoin(F.broadcast(n))
+        .select(
+            "token",
+            "df",
+            F.log(F.col("_n_docs").cast("double") / F.col("df")).alias("idf"),
+        )
+    )
+    return tf, idf
+
+
 def doc_payload(
     pages: DataFrame,
     id_col: str = "url",
@@ -55,20 +95,17 @@ def doc_payload(
     hash_tokens: bool = True,
     embeddings: DataFrame | None = None,
     emb_dim: int = 0,
-    emb_broadcast: bool = True,
     emb_skip_stopwords: bool = True,
 ) -> DataFrame:
-    """Per-document scoring payload: head, top-k token set, TF-IDF map.
+    """Per-document scoring payload: head, token count, TF-IDF map and
+    its L2 norm.
 
-    IDF is computed from the corpus itself (``log(N/df)``, reference builds
-    it in preprocessing and loads JSON — ``src/simple_dataset.py:62-63``,
-    ``src/create_compats.py:101-108``); here it's a groupBy + broadcast-join
-    back onto the exploded tokens.
-
-    N (the corpus size) is folded INTO the plan as a 1-row aggregate
-    cross-joined (broadcast) into the IDF build — no driver-side
-    ``count()`` pre-pass, so constructing this DataFrame launches zero
-    jobs and the corpus is scanned once, not twice.
+    The TF/IDF build is ``tf_idf``'s; the map's weights are ``tf·idf``
+    and ``idf`` is broadcast-joined back onto the term counts.
+    ``tfidf_norm`` is the L2 norm of the (top-k) map (reference:
+    ``candidate_tfidf_norm``, computed once per candidate,
+    ``src/simple_dataset.py:117-125``), so pair scoring reads each page's
+    norm instead of recomputing it for every pair the page is in.
 
     ``topk`` bounds the per-document payload to the ``topk``
     highest-TF-IDF terms (both the map and the token set). The payload is
@@ -106,43 +143,25 @@ def doc_payload(
     must be given (it sizes the per-dimension aggregate expressions; an
     inference pass would cost a job). Pooling shape at scale: the
     aggregation is ``emb_dim`` map-side-combinable SUMs over the tf long
-    table — no posexplode row blowup — and the vector table joins
-    broadcast by default (400k-token GloVe ≈ tens of MB as float);
-    ``emb_broadcast=False`` switches to a token-keyed shuffle join for
-    vocabularies that outgrow executor memory. The stored vector is
-    float32 (the reference's torch dtype), bounding the payload delta to
-    ``4·emb_dim`` bytes per doc on each side of every pair.
+    table — no posexplode row blowup. The vector table joins the way
+    Spark's size estimate picks (``spark.sql.autoBroadcastJoinThreshold``):
+    a 300-d, 400k-token GloVe table is ~480 MB of floats, too big to ship
+    to every task. The stored vector is float32 (the reference's torch
+    dtype), bounding the payload delta to ``4·emb_dim`` bytes per doc on
+    each side of every pair.
     """
-    toks = pages.select(
-        F.col(id_col).alias("id"), words(F.col(text_col)).alias("tokens")
-    )
-    # 1-row corpus count: metadata-cheap scan, stays inside the plan
-    n = pages.select(F.col(id_col)).agg(F.count("*").alias("_n_docs"))
-    tf = (
-        toks.select("id", F.explode("tokens").alias("token"))
-        .groupBy("id", "token")
-        .agg(F.count("*").alias("tf"))
-    )
+    tf, idf = tf_idf(pages, id_col, text_col)
     # head + token_cnt are computed NARROW (pre-shuffle projection of the
     # scan) rather than joining the full token arrays by id — tokenizing
     # twice is cheap map CPU, while shuffling every document's whole token
     # array was the single largest byte stream of the payload stage on a
     # memory-bandwidth-bound host (round-3 scaling fix)
-    slim = toks.select(
+    slim = pages.select(
+        F.col(id_col).alias("id"), words(F.col(text_col)).alias("tokens")
+    ).select(
         "id",
         F.concat_ws(" ", F.slice("tokens", 1, 8)).alias("head"),
         F.size("tokens").alias("token_cnt"),
-    )
-    # tf rows are unique per (id, token), so count(*) == docs containing
-    # the token — no countDistinct dedup pass needed
-    idf = (
-        tf.groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(n))
-        .select(
-            "token",
-            F.log(F.col("_n_docs").cast("double") / F.col("df")).alias("idf"),
-        )
     )
     entries = F.sort_array(
         F.collect_list(
@@ -182,7 +201,7 @@ def doc_payload(
         F.coalesce(
             "tfidf", F.create_map().cast(f"map<{key_t},double>")
         ).alias("tfidf"),
-    )
+    ).withColumn("tfidf_norm", tfidf_norm_map(F.col("tfidf")))
     if embeddings is not None:
         if emb_dim <= 0:
             raise ValueError(
@@ -197,8 +216,6 @@ def doc_payload(
             from entity_linking_spark.functions.text import STOPWORDS
 
             evec = evec.where(~F.col("token").isin(STOPWORDS))
-        if emb_broadcast:
-            evec = F.broadcast(evec)
         # Σ tf·idf·vec over the doc's tokens as emb_dim per-dim SUM
         # aggregates (map-side partial agg, no row blowup); double
         # accumulation, float32 storage
@@ -243,6 +260,11 @@ def _with_prior_features(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _payload_cols(payload: DataFrame) -> list[str]:
+    """Every payload column a pair side carries: all but the id."""
+    return [c for c in payload.columns if c != "id"]
+
+
 def pair_payload_half(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     """Pairs with prior features + the id_a-side payload attached.
 
@@ -259,13 +281,10 @@ def pair_payload_half(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     """
     if "n_shared" in pairs.columns:
         pairs = _with_prior_features(pairs)
-    cols = ["head", "token_cnt", "tfidf"] + (
-        ["emb"] if "emb" in payload.columns else []
-    )
     # a sort-merge join reads both bucketed sides as they lie, where a
     # broadcast of the pairs costs a job of its own
     return attach_pair_payload(
-        pairs.hint("merge"), payload, "id", cols, sides=("a",)
+        pairs.hint("merge"), payload, "id", _payload_cols(payload), sides=("a",)
     )
 
 
@@ -281,7 +300,8 @@ def pair_features(pairs: DataFrame, payload: DataFrame) -> DataFrame:
                           unit-cost ratio via the JVM builtin (codegen'd,
                           zero Python)
       jw_sim           — Jaro-Winkler of the head tokens (north_star add)
-      tfidf_norm_a/b   — TF-IDF L2 norms (ref: candidate_tfidf_norm)
+      tfidf_norm_a/b   — TF-IDF L2 norms (ref: candidate_tfidf_norm), the
+                          payload's ``tfidf_norm`` of each side
 
     When the payload carries an ``emb`` column (``doc_payload(embeddings=
     ...)``) two embedding-similarity features are added — the reference's
@@ -313,32 +333,26 @@ def pair_features(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     # attach only the sides still missing
     sides = tuple(s for s in ("a", "b") if f"head_{s}" not in pairs.columns)
     if ("emb_a" in pairs.columns) != (has_emb and "a" not in sides):
-        # e.g. a resumed pairs_payload_a stage built with another emb_dim
+        # e.g. a resumed a-side stage built with another emb_dim
         raise ValueError(
             "the pairs' attached a-side payload and the payload disagree on "
             f"embeddings (pairs emb_a: {'emb_a' in pairs.columns}, payload "
             f"emb: {has_emb}); build both with the same emb_dim"
         )
-    p = attach_pair_payload(
-        pairs,
-        payload,
-        "id",
-        ["head", "token_cnt", "tfidf"] + (["emb"] if has_emb else []),
-        sides=sides,
-    )
+    p = attach_pair_payload(pairs, payload, "id", _payload_cols(payload), sides=sides)
     head_a, head_b = F.col("head_a"), F.col("head_b")
     # the token set IS the tfidf map's key set — no separate array column
     set_a = F.map_keys(F.col("tfidf_a"))
     set_b = F.map_keys(F.col("tfidf_b"))
     inter = F.size(F.array_intersect(set_a, set_b))
     uni = F.size(set_a) + F.size(set_b) - inter
+    norms = F.col("tfidf_norm_a") * F.col("tfidf_norm_b")
+    dot = tfidf_dot_maps(F.col("tfidf_a"), F.col("tfidf_b"))
     out = (
-        p.withColumn("tfidf_cos", tfidf_cosine_maps(F.col("tfidf_a"), F.col("tfidf_b")))
+        p.withColumn("tfidf_cos", F.when(norms == 0, 0.0).otherwise(dot / norms))
         .withColumn("jaccard", F.when(uni == 0, 0.0).otherwise(inter / uni))
         .withColumn("str_sim", lev_ratio_unit(head_a, head_b))
         .withColumn("jw_sim", jaro_winkler(head_a, head_b))
-        .withColumn("tfidf_norm_a", tfidf_norm_map(F.col("tfidf_a")))
-        .withColumn("tfidf_norm_b", tfidf_norm_map(F.col("tfidf_b")))
         .withColumnRenamed("token_cnt_a", "cand_token_cnt")
         .withColumnRenamed("token_cnt_b", "mention_token_cnt")
         .drop("head_a", "head_b", "tfidf_a", "tfidf_b")

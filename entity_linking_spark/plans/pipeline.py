@@ -6,9 +6,9 @@ One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
     (id fold) → working ids: xxhash64 (or 128-bit) of the input id
     blocks    → (id, block_key): host ∪ norm-prefix ∪ MinHash-LSH bands,
                 mega-block salting + deterministic size caps
+    payload   → per-page head / token count / TF-IDF map and its norm
+                (/ pooled embedding) row
     pairs     → block self-join, id_a < id_b, dedup
-    payload   → per-page TF-IDF / head / token-count (/ embedding) row
-    [pairs_payload_a] → pairs with the id_a-side payload attached
     scored    → JVM pair features (Catalyst + Java string kernels) ▷
                 linear / learned score
     clusters  → edges (score ≥ τ) → connected components (one-task
@@ -19,9 +19,10 @@ One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
 Every runner is the same graph with its own materialization callback:
 ``link_pages`` persists ``pages``, ``blocks`` and ``payload`` in memory;
 ``checkpoint.run_linkage_checkpointed`` writes each stage to a resumable
-checkpoint; ``score_candidate_pairs`` materializes nothing and stops
-after ``scored``. ``pairwise_metrics`` scores clusters against labeled
-pairs.
+checkpoint (its dual-bucket layout adds a stage of its own between
+``pairs`` and ``scored``); ``score_candidate_pairs`` materializes nothing
+and stops after ``scored``. ``pairwise_metrics`` scores clusters against
+labeled pairs.
 
 Reference lineage: the stages mirror the reference's candidate-generation →
 feature-scoring → argmax/collective-consistency flow
@@ -49,20 +50,8 @@ from entity_linking_spark.operators.scoring import (
     GBTScorer,
     TrainedScorer,
     doc_payload,
-    pair_payload_half,
     score_pairs,
 )
-
-
-def _conf_bytes(raw: str) -> int:
-    """Parse a Spark size conf value ("128MB", "134217728b", "4m")."""
-    s = raw.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    for suf, mult in (("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4)):
-        if s.endswith(suf):
-            return int(s[: -len(suf)]) * mult
-    return int(s)
 
 
 def estimated_scan_width(df: DataFrame) -> int | None:
@@ -85,12 +74,9 @@ def estimated_scan_width(df: DataFrame) -> int | None:
     files = df.inputFiles()
     if not files:
         return None
-    conf = df.sparkSession.conf
-    try:
-        max_pb = _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
-        open_cost = _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
-    except Exception:
-        max_pb, open_cost = 128 * 1024**2, 4 * 1024**2
+    # the session's SQLConf parses the size strings ("128MB", "4m")
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    max_pb, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
     sizes: list[int] = []
     row_groups: list[int | None] = []
     for f in files:
@@ -256,7 +242,6 @@ def _run_stages(
     text_col: str,
     url_col: str | None,
     embeddings: DataFrame | None = None,
-    dual_bucket: bool = False,
     scored_only: bool = False,
 ) -> DataFrame:
     """The one definition of the stage graph (see the module docstring).
@@ -265,8 +250,10 @@ def _run_stages(
     returns the stage's frame from the stages before it; the callback
     decides how the stage materializes (persist, checkpoint, or not at
     all) and returns the frame the later stages read. Names in order:
-    ``pages``, ``blocks``, ``pairs``, ``payload``, ``pairs_payload_a``
-    (only with ``dual_bucket``), ``scored``, ``clusters``.
+    ``pages``, ``blocks``, ``payload``, ``pairs``, ``scored``,
+    ``clusters``; ``payload`` comes before ``pairs`` so that a callback
+    may return the pairs with payload already attached (the checkpointed
+    runner's dual-bucket layout).
 
     → (id, cluster_id) over the input ids; with ``scored_only`` the graph
     stops after ``scored`` and returns the scored pairs over input ids.
@@ -299,9 +286,6 @@ def _run_stages(
             max_block=cfg.max_block,
         ),
     )
-    pairs = stage(
-        "pairs", lambda: candidate_pairs(blocks, with_count=cfg.prior_features)
-    )
     payload = stage(
         "payload",
         lambda: doc_payload(
@@ -314,11 +298,9 @@ def _run_stages(
             emb_dim=cfg.emb_dim if embeddings is not None else 0,
         ),
     )
-    if dual_bucket:
-        raw_pairs = pairs
-        pairs = stage(
-            "pairs_payload_a", lambda: pair_payload_half(raw_pairs, payload)
-        )
+    pairs = stage(
+        "pairs", lambda: candidate_pairs(blocks, with_count=cfg.prior_features)
+    )
     scored = stage(
         "scored",
         lambda: score_pairs(pairs, payload, weights=cfg.weights, model=cfg.model),

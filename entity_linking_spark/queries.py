@@ -62,6 +62,7 @@ from entity_linking_spark.hashing import (
 from entity_linking_spark.operators import blocking
 from entity_linking_spark.operators.blocking import norm_text_prefix_key
 from entity_linking_spark.operators.pairs import attach_pair_payload, candidate_pairs
+from entity_linking_spark.operators.scoring import tf_idf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1785,27 +1786,11 @@ def bag_of_nouns(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def idf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IDF build: log(N/df) from document frequencies (reference A7 —
-    consumed from JSON, /root/reference/src/simple_dataset.py:62-63;
-    built here with one groupBy)."""
-    docs = _t(spark, sf_dir, "documents")
-    # N folded into the plan (1-row agg, broadcast cross-join) — no
-    # driver-side count() pre-pass, corpus scanned once
-    n = docs.select("doc_id").agg(F.count("*").alias("_n_docs"))
-    tok = docs.select(
-        "doc_id", F.explode(X.words(F.col("text"))).alias("token")
-    ).distinct()
-    return (
-        tok.groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(n))
-        .select(
-            "token",
-            "df",
-            F.round(
-                F.log(F.col("_n_docs").cast("double") / F.col("df")), 6
-            ).alias("idf"),
-        )
-    )
+    consumed from JSON, /root/reference/src/simple_dataset.py:62-63).
+    The Spark side is ``scoring.tf_idf``, the build the pipeline's
+    payload uses."""
+    _, idf = tf_idf(_t(spark, sf_dir, "documents"), "doc_id")
+    return idf.select("token", "df", F.round("idf", 6).alias("idf"))
 
 
 @register(
@@ -1841,27 +1826,16 @@ def tfidf_pair_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF dot product per candidate pair via explode-join-agg — the
     shuffle formulation of reference A8 (``calc_tfidf``,
     /root/reference/src/simple_dataset.py:117-122): sparse dot as a
-    long-table join, the form that scales when maps don't fit in a row."""
+    long-table join, the form that scales when maps don't fit in a row.
+    The weights come from ``scoring.tf_idf``, as the payload's do."""
     docs = _t(spark, sf_dir, "documents")
-    n = docs.select("doc_id").agg(F.count("*").alias("_n_docs"))
-    tok = docs.select("doc_id", F.explode(X.words(F.col("text"))).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    idf = (
-        tf.select("doc_id", "token").distinct()
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(n))
-        .select(
-            "token",
-            F.log(F.col("_n_docs").cast("double") / F.col("df")).alias("idf"),
-        )
-    )
+    tf, idf = tf_idf(docs, "doc_id")
     w = tf.join(F.broadcast(idf), "token").select(
-        "doc_id", "token", (F.col("tf") * F.col("idf")).alias("w")
+        "id", "token", (F.col("tf") * F.col("idf")).alias("w")
     )
     pairs = candidate_pairs(_pfx_blocks(docs), id_col="doc_id")
-    wa = w.select(F.col("doc_id").alias("id_a"), "token", F.col("w").alias("wa"))
-    wb = w.select(F.col("doc_id").alias("id_b"), "token", F.col("w").alias("wb"))
+    wa = w.select(F.col("id").alias("id_a"), "token", F.col("w").alias("wa"))
+    wb = w.select(F.col("id").alias("id_b"), "token", F.col("w").alias("wb"))
     return (
         pairs.join(wa, "id_a")
         .join(wb, ["id_b", "token"])

@@ -35,14 +35,19 @@ def get_spark(
 
     ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]``. ``master`` overrides
     the master URL entirely (e.g. ``local-cluster[8,1,4096]`` for the
-    multi-executor-JVM scaling evidence). On a cluster this module is a
-    no-op passthrough: spark-submit owns the master URL and the builder
-    just layers engine confs on top.
+    multi-executor-JVM scaling evidence). Under a launcher that started
+    the JVM (spark-submit, the pyspark shell: ``PYSPARK_GATEWAY_PORT`` is
+    set) the launcher's master stands unless ``master`` is passed, and
+    the builder just layers engine confs on top. The test reads the
+    environment rather than asking a JVM, so a session this call launches
+    still gets its ``spark.driver.memory``.
     """
     n = cores or cpu_count()
+    builder = SparkSession.builder
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(master or f"local[{n}]")
     builder = (
-        SparkSession.builder.master(master or f"local[{n}]")
-        .appName(app_name)
+        builder.appName(app_name)
         # shuffle width ~ parallelism; AQE coalesces small post-shuffle
         # partitions at runtime so slight over-provisioning is free.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(n, 8)))

@@ -40,12 +40,11 @@ def main() -> None:
     ap.add_argument("--text-col", default="text")
     args = ap.parse_args()
 
-    # under spark-submit the session already exists/configured by the
-    # launcher; getOrCreate layers engine confs without overriding master
-    from pyspark.sql import SparkSession
+    # under spark-submit the launcher owns the master; get_spark layers
+    # the engine confs on top without overriding it
+    from entity_linking_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("elspark-linkage").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("elspark-linkage")
 
     from entity_linking_spark.checkpoint import run_linkage_checkpointed
     from entity_linking_spark.plans.pipeline import LinkageConfig

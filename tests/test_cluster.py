@@ -90,20 +90,17 @@ def test_empty_edge_set(spark):
 
 
 def test_null_ends(spark):
-    # an edge with one null end leaves its other end a node; both paths
-    # label every non-null node alike
+    # an edge with one null end leaves its other end a node, a null-null
+    # edge leaves nothing: both paths return the same rows, none null
     df = spark.createDataFrame(
         [(1, None), (None, None), (2, 3), (None, 4), (4, 5)], "src long, dst long"
     )
     for bound in (LOCAL_MAX_EDGES, 0):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(cluster, "LOCAL_MAX_EDGES", bound)
-            got = {
-                r["node"]: r["component"]
-                for r in connected_components(df).collect()
-                if r["node"] is not None
-            }
-        assert got == {1: 1, 2: 2, 3: 2, 4: 4, 5: 4}, bound
+            got = [tuple(r) for r in connected_components(df).collect()]
+        assert len(got) == 5, (bound, got)
+        assert set(got) == {(1, 1), (2, 2), (3, 2), (4, 4), (5, 4)}, bound
 
 
 def test_signed_ids(spark):

@@ -269,22 +269,64 @@ def test_id_bits_128_parity_star_rounds(corpus, monkeypatch):
 
 
 def test_pooled_embedding_shuffle_join_parity(spark, tiny):
-    # emb_broadcast=False (vocabularies too big for executor memory)
-    # switches the vector join to a token-keyed shuffle — values identical
+    # the vector table joins as Spark's size estimate picks; with
+    # broadcasting off it joins by a token-keyed shuffle: same vectors
     pages, emb = tiny
-    a = {
-        r["id"]: r["emb"]
-        for r in doc_payload(
-            pages, id_col="id", embeddings=emb, emb_dim=2
-        ).collect()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def pooled():
+        df = doc_payload(pages, id_col="id", embeddings=emb, emb_dim=2)
+        return {r["id"]: r["emb"] for r in df.collect()}
+
+    a = pooled()
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        b = pooled()
+    finally:
+        spark.conf.set(key, saved)
+    assert a == b and len(a) == 3
+
+
+def test_tfidf_features_match_per_pair_formulas(spark, tmp_path):
+    # the payload's tfidf_norm, computed once per page, gives the values
+    # the per-pair formulas give on every candidate pair of the pipeline
+    from entity_linking_spark.functions.similarity import (
+        tfidf_dot_maps,
+        tfidf_norm_map,
+    )
+    from entity_linking_spark.operators.pairs import attach_pair_payload
+    from entity_linking_spark.plans.pipeline import _run_stages
+
+    write_parquet(str(tmp_path), n_entities=10, seed=42)
+    pages = spark.read.parquet(f"{tmp_path}/pages.parquet")
+    frames = {}
+
+    def stage(name, build):
+        frames[name] = build()
+        return frames[name]
+
+    _run_stages(pages, stage, LinkageConfig(), "url", "text", "url", scored_only=True)
+    pairs, payload = frames["pairs"], frames["payload"]
+    cols = ["tfidf_cos", "tfidf_norm_a", "tfidf_norm_b"]
+    got = {
+        (r["id_a"], r["id_b"]): tuple(r[c] for c in cols)
+        for r in pair_features(pairs, payload).collect()
     }
-    b = {
-        r["id"]: r["emb"]
-        for r in doc_payload(
-            pages, id_col="id", embeddings=emb, emb_dim=2,
-            emb_broadcast=False,
-        ).collect()
+    na = tfidf_norm_map(F.col("tfidf_a"))
+    nb = tfidf_norm_map(F.col("tfidf_b"))
+    dot = tfidf_dot_maps(F.col("tfidf_a"), F.col("tfidf_b"))
+    want = {
+        (r["id_a"], r["id_b"]): tuple(r[c] for c in cols)
+        for r in attach_pair_payload(pairs, payload, "id", ["tfidf"])
+        .select(
+            "id_a",
+            "id_b",
+            F.when(na * nb == 0, 0.0).otherwise(dot / (na * nb)).alias("tfidf_cos"),
+            na.alias("tfidf_norm_a"),
+            nb.alias("tfidf_norm_b"),
+        )
+        .collect()
     }
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k] == pytest.approx(b[k], rel=1e-6)
+    assert len(got) > 100
+    assert got == want

@@ -7,6 +7,9 @@ and no Python row-at-a-time UDFs (the pair scores run in the JVM)
 production run.
 """
 
+import math
+import os
+
 from pyspark.sql import functions as F
 
 from entity_linking_spark.queries import queries
@@ -140,6 +143,20 @@ def test_widen_input_scan_width_estimate(spark, tmp_path):
         df_narrow = spark.read.parquet(narrow)
         assert estimated_scan_width(df_narrow) == 1
         assert _widen_input(df_narrow).rdd.getNumPartitions() == n_par
+
+        # sizes with a unit suffix: a large open cost makes the 1 MiB
+        # maxPartitionBytes the split size, so a file of a few MiB with
+        # more row groups than that estimates ceil(size / 1 MiB)
+        big = str(tmp_path / "big.parquet")
+        pq.write_table(
+            pa.table({"text": [f"{i:064x}" for i in range(60_000)]}),
+            big, row_group_size=5_000, compression="none",
+        )
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+        spark.conf.set("spark.sql.files.openCostInBytes", "64m")
+        splits = math.ceil(os.path.getsize(big) / 2**20)
+        assert splits >= 2
+        assert estimated_scan_width(spark.read.parquet(big)) == splits
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

@@ -5,7 +5,7 @@
   ``/root/reference/src/simple_dataset.py:180``.
 - ``jaro_winkler`` must match DuckDB's ``jaro_winkler_similarity``
   bit-for-bit (it is oracle-checked by the driver).
-- JVM-side cosine/tfidf map algebra vs numpy.
+- JVM-side cosine vs numpy; ``pair_features``' TF-IDF cosine golden.
 """
 
 import math
@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 from entity_linking_spark.functions.similarity import (
     cosine_arrays,
     lev_ratio_unit,
-    tfidf_cosine_maps,
+    tfidf_norm_map,
 )
+from entity_linking_spark.operators.scoring import pair_features
 from similarity_reference import _jaro_winkler_one, _lev_ratio_cost2_one
 
 
@@ -78,11 +79,13 @@ def test_cosine_arrays_vs_numpy(spark):
     assert abs(got - want) < 1e-9
 
 
-def test_tfidf_cosine_maps(spark):
-    df = spark.createDataFrame(
-        [({"x": 1.0, "y": 2.0}, {"y": 3.0, "z": 1.0})],
-        "a map<string,double>, b map<string,double>",
-    )
-    got = df.select(tfidf_cosine_maps(F.col("a"), F.col("b")).alias("c")).collect()[0]["c"]
+def test_tfidf_cos_golden(spark):
+    # pair_features' tfidf_cos reads the payload's per-page norms
+    payload = spark.createDataFrame(
+        [(1, "x", 2, {"x": 1.0, "y": 2.0}), (2, "y", 2, {"y": 3.0, "z": 1.0})],
+        "id long, head string, token_cnt int, tfidf map<string,double>",
+    ).withColumn("tfidf_norm", tfidf_norm_map(F.col("tfidf")))
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    got = pair_features(pairs, payload).collect()[0]["tfidf_cos"]
     want = 6.0 / (math.sqrt(5) * math.sqrt(10))
     assert abs(got - want) < 1e-12
