@@ -71,6 +71,35 @@ def config_digest(obj) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
+def _input_fingerprint(pages: DataFrame) -> str:
+    """What a checkpointed run reads, so that a changed input rebuilds.
+
+    The canonical analyzed plan keys the selects and filters over the
+    input, the sorted (path, length, modification time) of every input
+    file keys the data, and a frame with no input files is keyed on its
+    plan's ``semanticHash`` — the canonical plan shows no in-memory data.
+    ``semanticHash`` is not stable across processes for a file read, so
+    it keys in-memory frames only, which then resume within their own
+    process and rebuild in a new one. A frame that mixes files with
+    in-memory data is keyed on its files and plan.
+    """
+    from entity_linking_spark.plans.pipeline import input_file_statuses
+
+    plan = pages._jdf.queryExecution().analyzed()
+    canonical = plan.canonicalized().toString().encode()
+    files = sorted(
+        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        for st in input_file_statuses(pages)
+    )
+    return config_digest(
+        {
+            "plan": hashlib.sha256(canonical).hexdigest(),
+            "files": files,
+            "in_memory": None if files else plan.semanticHash(),
+        }
+    )
+
+
 class StageCheckpointer:
     """Materialize named pipeline stages; completed stages are not recomputed.
 
@@ -268,7 +297,9 @@ def run_linkage_checkpointed(
     checkpoints, one write job each. Killing the job after any stage and
     re-running reuses all completed stages (tests/test_resume.py proves
     identical output either way). Stages carry working ids; a run_dir
-    written by an older layout has a different digest and rebuilds.
+    written by an older layout, or over another input (``pages``' plan
+    and files — see ``_input_fingerprint``), has a different digest and
+    rebuilds.
 
     ``bucketed`` (default True): write ``blocks`` bucketed on
     ``block_key`` (the pair self-join reads both sides exchange-free),
@@ -305,12 +336,13 @@ def run_linkage_checkpointed(
         raise ValueError("dual_bucket requires bucketed=True")
     cfg = config or LinkageConfig()
     ckpt = StageCheckpointer(spark, run_dir)
-    # one digest for the whole run config: any param change (blocking,
-    # weights, threshold, column mapping) invalidates every stage built
-    # under the old config
+    # one digest for the whole run config and its input: any param change
+    # (blocking, weights, threshold, column mapping) or a changed input
+    # invalidates every stage built under the old one
     dig = config_digest(
         {
             "config": config_digest(cfg),
+            "input": _input_fingerprint(pages),
             "id_col": id_col,
             "text_col": text_col,
             "url_col": url_col,

@@ -13,8 +13,9 @@ whole-stage codegen, and Jaro-Winkler as a Java UDF from
 (BASELINE.json input_hint: no per-row Python).
 
 Scorer: fixed-weight linear model (reference:
-``src/fixed_weights_model.py:4-10``) — a pure column expression. The
-interface leaves room for a broadcast learned model inside a pandas UDF
+``src/fixed_weights_model.py:4-10``) — a pure column expression — or a
+learned one behind the same ``attach_score`` call, both run in the JVM:
+a logistic model as plan literals, a tree ensemble by ``pyspark.ml``
 (reference swaps MLP/XGBoost/fixed behind one interface,
 ``src/eval_ltr_bow_model.py:29-45``).
 """
@@ -368,13 +369,27 @@ def pair_features(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     return out
 
 
-def linear_score(weights: dict[str, float] | None = None) -> Column:
-    """Fixed-weight linear scorer column (ref fixed_weights_model.py:4-10)."""
-    w = weights or DEFAULT_WEIGHTS
-    expr = F.lit(0.0)
-    for name, weight in w.items():
+def _linear_sum(weights: dict[str, float], bias: float = 0.0) -> Column:
+    """bias + Σ weight·feature, summed bias first in the dict's order."""
+    expr = F.lit(float(bias))
+    for name, weight in weights.items():
         expr = expr + F.lit(float(weight)) * F.col(name)
     return expr
+
+
+def linear_score(weights: dict[str, float] | None = None) -> Column:
+    """Fixed-weight linear scorer column (ref fixed_weights_model.py:4-10)."""
+    return _linear_sum(weights or DEFAULT_WEIGHTS)
+
+
+def _assemble(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` with ``cols`` cast to double and assembled into the
+    ``_features`` vector that ``pyspark.ml`` fits and transforms."""
+    from pyspark.ml.feature import VectorAssembler
+
+    return VectorAssembler(inputCols=cols, outputCol="_features").transform(
+        df.withColumns({c: F.col(c).cast("double") for c in cols})
+    )
 
 
 @dataclass
@@ -383,22 +398,19 @@ class TrainedScorer:
     weights (reference swaps FixedWeights / MLP / XGBoost behind one
     ``load_model``, ``src/eval_ltr_bow_model.py:29-45``).
 
-    Inference is a pure Catalyst expression — sigmoid(w·x + b) with the
-    learned weights baked in as literals, i.e. "broadcast" at plan level
-    with zero Python in the hot path (strictly cheaper than shipping the
-    model into a pandas UDF; a UDF is only warranted once the model stops
-    being linear). ``threshold`` 0.5 = the probability midpoint.
+    Inference (``attach_score``) is a pure Catalyst expression —
+    sigmoid(w·x + b) with the learned weights baked in as literals, i.e.
+    "broadcast" at plan level with zero Python in the hot path.
+    ``threshold`` 0.5 = the probability midpoint.
     """
 
     weights: dict[str, float] = field(default_factory=dict)
     bias: float = 0.0
     threshold: float = 0.5
 
-    def column(self) -> Column:
-        z = F.lit(float(self.bias))
-        for name, w in self.weights.items():
-            z = z + F.lit(float(w)) * F.col(name)
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    def attach_score(self, feats: DataFrame) -> DataFrame:
+        z = _linear_sum(self.weights, self.bias)
+        return feats.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
 
 
 def train_pair_scorer(
@@ -411,16 +423,10 @@ def train_pair_scorer(
     pyspark.ml L-BFGS, so training scales with the corpus like everything
     else) and return the weights as a :class:`TrainedScorer`."""
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
 
     cols = feature_cols or ["tfidf_cos", "jaccard", "str_sim", "jw_sim"]
-    vec = VectorAssembler(inputCols=cols, outputCol="_features")
-    assembled = vec.transform(
-        features.select(
-            *[F.col(c).cast("double").alias(c) for c in cols],
-            F.col(label_col).cast("double").alias(label_col),
-        )
-    )
+    label = F.col(label_col).cast("double").alias(label_col)
+    assembled = _assemble(features.select(*cols, label), cols)
     lr = LogisticRegression(
         featuresCol="_features",
         labelCol=label_col,
@@ -454,19 +460,10 @@ class GBTScorer:
     threshold: float = 0.5
 
     def attach_score(self, feats: DataFrame) -> DataFrame:
-        from pyspark.ml.feature import VectorAssembler
         from pyspark.ml.functions import vector_to_array
 
         keep = feats.columns
-        vec = VectorAssembler(
-            inputCols=self.feature_cols, outputCol="_features"
-        )
-        assembled = vec.transform(
-            feats.withColumns(
-                {c: F.col(c).cast("double") for c in self.feature_cols}
-            )
-        )
-        scored = self.model.transform(assembled)
+        scored = self.model.transform(_assemble(feats, self.feature_cols))
         return scored.select(
             *keep, vector_to_array(F.col("probability"))[1].alias("score")
         )
@@ -486,16 +483,10 @@ def train_gbt_scorer(
     round-trips the training shape: ``read_libsvm_qid`` output feeds this
     directly after exploding the feature array into named columns."""
     from pyspark.ml.classification import GBTClassifier
-    from pyspark.ml.feature import VectorAssembler
 
     cols = feature_cols or ["tfidf_cos", "jaccard", "str_sim", "jw_sim"]
-    vec = VectorAssembler(inputCols=cols, outputCol="_features")
-    assembled = vec.transform(
-        features.select(
-            *[F.col(c).cast("double").alias(c) for c in cols],
-            F.col(label_col).cast("double").alias(label_col),
-        )
-    )
+    label = F.col(label_col).cast("double").alias(label_col)
+    assembled = _assemble(features.select(*cols, label), cols)
     gbt = GBTClassifier(
         featuresCol="_features",
         labelCol=label_col,
@@ -557,10 +548,9 @@ def score_pairs(
     """Scored pairs; ``model`` (trained — linear or GBT) takes precedence
     over fixed ``weights`` — same output column either way."""
     feats = pair_features(pairs, payload)
-    if model is not None and hasattr(model, "attach_score"):
+    if model is not None:
         return model.attach_score(feats)
-    score = model.column() if model is not None else linear_score(weights)
-    return feats.withColumn("score", score)
+    return feats.withColumn("score", linear_score(weights))
 
 
 def ranking_metrics(

@@ -54,6 +54,21 @@ from entity_linking_spark.operators.scoring import (
 )
 
 
+def _hadoop_conf(df: DataFrame):
+    # the SparkContext's conf overlaid with the session's, as a scan reads
+    return df.sparkSession._jsparkSession.sessionState().newHadoopConf()
+
+
+def input_file_statuses(df: DataFrame) -> list:
+    """The Hadoop ``FileStatus`` of every file ``df`` scans (none for an
+    in-memory frame), statted through the ``FileSystem`` of its scheme
+    with the session's Hadoop conf, as the scan itself reads them."""
+    jvm, conf = df.sparkSession._jvm, _hadoop_conf(df)
+    fs = jvm.org.apache.hadoop.fs
+    paths = [fs.Path(jvm.java.net.URI(f)) for f in df.inputFiles()]
+    return [p.getFileSystem(conf).getFileStatus(p) for p in paths]
+
+
 def estimated_scan_width(df: DataFrame) -> int | None:
     """Estimate how many NON-EMPTY scan tasks a file-backed frame yields.
 
@@ -63,47 +78,39 @@ def estimated_scan_width(df: DataFrame) -> int | None:
     byte-range splits beyond the row groups produce empty tasks, which is
     exactly the single-row-group pathology ``_widen_input`` exists for
     (and why raw file count under-counts a large multi-row-group file —
-    round-4 advice). Returns ``None`` when the estimate isn't cheaply
-    available (in-memory frame, non-local scheme, unreadable footer);
-    ``_widen_input`` then falls back to the file count.
+    round-4 advice). Lengths and footers come through Hadoop's
+    ``FileSystem`` and parquet's footer reader, as the scan's own do, so
+    every scheme is estimated alike. Only a file that spans more than one
+    split has its footer read, and a frame of at least
+    ``defaultParallelism`` files is wide without a stat. A footer error
+    propagates (the scan would fail on it too). ``None`` means an
+    in-memory frame.
     """
+    import contextlib
     import math
-    import os
-    from urllib.parse import unquote, urlparse
 
     files = df.inputFiles()
     if not files:
         return None
+    spark = df.sparkSession
+    n_par = max(spark.sparkContext.defaultParallelism, 1)
+    if len(files) >= n_par:
+        return len(files)
     # the session's SQLConf parses the size strings ("128MB", "4m")
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    conf = spark._jsparkSession.sessionState().conf()
     max_pb, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
-    sizes: list[int] = []
-    row_groups: list[int | None] = []
-    for f in files:
-        pr = urlparse(f)
-        if pr.scheme not in ("", "file"):
-            return None  # remote store: stat/footer not cheap from driver
-        p = unquote(pr.path) or f
-        try:
-            sizes.append(os.path.getsize(p))
-        except OSError:
-            return None
-        if p.endswith(".parquet"):
-            try:
-                import pyarrow.parquet as pq
-
-                row_groups.append(pq.ParquetFile(p).metadata.num_row_groups)
-            except Exception:
-                row_groups.append(None)
-        else:
-            row_groups.append(None)
-    n_par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    total = sum(sizes) + open_cost * len(files)
-    max_split = min(max_pb, max(open_cost, total // n_par))
+    statuses = input_file_statuses(df)
+    total = sum(st.getLen() for st in statuses) + open_cost * len(files)
+    max_split = max(min(max_pb, max(open_cost, total // n_par)), 1)
+    parquet, hconf = spark._jvm.org.apache.parquet.hadoop, _hadoop_conf(df)
     width = 0
-    for size, rgs in zip(sizes, row_groups):
-        splits = max(1, math.ceil(size / max(max_split, 1)))
-        width += min(splits, rgs) if rgs else splits
+    for st in statuses:
+        splits = max(1, math.ceil(st.getLen() / max_split))
+        if splits > 1 and st.getPath().getName().endswith(".parquet"):
+            footer = parquet.util.HadoopInputFile.fromStatus(st, hconf)
+            with contextlib.closing(parquet.ParquetFileReader.open(footer)) as r:
+                splits = min(splits, r.getRowGroups().size() or splits)
+        width += splits
     return width
 
 
@@ -117,19 +124,16 @@ def _widen_input(pages: DataFrame) -> DataFrame:
     on a real cluster with many files this is a no-op.
 
     The narrowness test is ``estimated_scan_width`` (split math + parquet
-    row-group cap), NOT raw file count: a few large multi-row-group files
-    already scan wide and must not pay a needless full-corpus shuffle
-    (round-4 advice). Raw file count is only the fallback where that
-    estimate is unavailable (remote inputs, whose footers are not read
-    from the driver). Nor is it ``rdd.getNumPartitions()``: the RDD
-    conversion costs ~1.9s of cold driver time. In-memory frames (zero
-    files) inherit their source parallelism and are left alone.
+    row-group cap, for local and remote files alike), NOT raw file count:
+    a few large multi-row-group files already scan wide and must not pay
+    a needless full-corpus shuffle (round-4 advice). Nor is it
+    ``rdd.getNumPartitions()``: the RDD conversion costs ~1.9s of cold
+    driver time. In-memory frames (no estimate) inherit their source
+    parallelism and are left alone.
     """
     n_par = pages.sparkSession.sparkContext.defaultParallelism
     width = estimated_scan_width(pages)
-    if width is None:
-        width = len(pages.inputFiles()) or n_par
-    if width < n_par:
+    if width is not None and width < n_par:
         return pages.repartition(n_par)
     return pages
 
@@ -199,9 +203,9 @@ class LinkageConfig:
     # fixture at max_block=3: 27 vs 26 clusters).
     id_bits: int = 64
     weights: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
-    # learned scorer — linear (TrainedScorer) or tree-ensemble (GBTScorer);
-    # takes precedence over fixed weights; its own probability threshold
-    # replaces `threshold`
+    # learned scorer — linear (TrainedScorer) or tree-ensemble (GBTScorer),
+    # either one's attach_score sets the score; takes precedence over fixed
+    # weights, and its own probability threshold replaces `threshold`
     model: TrainedScorer | GBTScorer | None = None
 
     @property
@@ -209,8 +213,8 @@ class LinkageConfig:
         return self.model.threshold if self.model is not None else self.threshold
 
 
-def _working_id(pages: DataFrame, id_col: str, cfg: LinkageConfig) -> tuple[Column, bool]:
-    """The pipeline-interior id for ``id_col`` → (column, ids_integral).
+def _working_id(pages: DataFrame, id_col: str, cfg: LinkageConfig) -> Column:
+    """The pipeline-interior id for ``id_col``.
 
     The id rides every hot shuffle (blocking, both sides of the pair
     join, both payload joins, every CC round), and input ids are
@@ -219,19 +223,18 @@ def _working_id(pages: DataFrame, id_col: str, cfg: LinkageConfig) -> tuple[Colu
     two-seed xxhash64 struct, birthday-safe at 10^12 docs. Caps keep
     block members in working-id order, so the width changes the clusters
     once caps bite. Integral ids are used as they are (order-preserving,
-    collision-free), which lets the id restore skip the representative
-    join (min working id == min id).
+    collision-free); the id restore treats every working id alike.
     """
     from pyspark.sql.types import IntegralType
 
     if isinstance(pages.schema[id_col].dataType, IntegralType):
-        return F.col(id_col).cast("bigint"), True
+        return F.col(id_col).cast("bigint")
     if cfg.id_bits >= 128:
         return F.struct(
             F.xxhash64(F.col(id_col)).alias("h1"),
             F.xxhash64(F.col(id_col), F.lit(1)).alias("h2"),
-        ), False
-    return F.xxhash64(F.col(id_col)), False
+        )
+    return F.xxhash64(F.col(id_col))
 
 
 def _run_stages(
@@ -263,7 +266,7 @@ def _run_stages(
     # shuffled and cached for nothing
     src = pages.select(*[c for c in {id_col, text_col, url_col} if c])
     pages = stage("pages", lambda: _widen_input(src))
-    nid, ids_integral = _working_id(pages, id_col, cfg)
+    nid = _working_id(pages, id_col, cfg)
     work = pages.withColumn("_nid", nid)
     blocks = stage(
         "blocks",
@@ -325,16 +328,9 @@ def _run_stages(
             checkpoint_dir=cfg.cc_checkpoint_dir,
             fuse_rounds=cfg.cc_fuse_rounds,
         )
-        if ids_integral:
-            # _nid == id: component (min _nid) IS the min member id already
-            id_t = pages.schema[id_col].dataType.simpleString()
-            return ids.join(comp, ids._nid == comp.node, "left").select(
-                "id",
-                F.coalesce("component", F.col("_nid")).cast(id_t).alias("cluster_id"),
-            )
-        # map hashed components back to original ids and restore the
-        # documented representative (cluster_id = min member id): two
-        # end-stage shuffles over (id, component) — one narrow row per page
+        # map components back to input ids and restore the documented
+        # representative (cluster_id = min member id): two end-stage
+        # shuffles over (id, component) — one narrow row per page
         labeled = ids.join(comp, ids._nid == comp.node, "left").select(
             "id", F.coalesce("component", F.col("_nid")).alias("_comp")
         )

@@ -20,6 +20,8 @@ def test_entry_runs(spark):
     for r in rows:
         members.setdefault(r["cluster_id"], []).append(r["id"])
     assert all(c == min(m) for c, m in members.items())
+    # the id restore keeps the integral id's type
+    assert df.schema["cluster_id"].dataType == df.schema["id"].dataType
 
 
 def test_contract_shapes():

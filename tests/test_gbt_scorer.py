@@ -144,7 +144,7 @@ def test_learned_scorers_rank_qid_groups(corpus, spark, tmp_path_factory):
     )
     logit = train_pair_scorer(train, feature_cols=FEATURES)
     m_log = ranking_metrics(
-        rankable.withColumn("score", logit.column()), tiebreak_col="id_b"
+        logit.attach_score(rankable.drop("score")), tiebreak_col="id_b"
     )
 
     for m in (m_gbt, m_log):

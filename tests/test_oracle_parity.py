@@ -7,6 +7,8 @@ that differs in the last bit here would fail there. Queries are therefore
 designed with identical arithmetic + explicit rounding on both sides.
 """
 
+import hashlib
+import json
 import math
 import os
 
@@ -78,3 +80,12 @@ def test_query_matches_oracle(spark, name):
         (a, b) for a, b in zip(s_vals, d_vals) if a != b
     ]
     assert not mismatches, f"{name}: {len(mismatches)} value mismatches; first: {mismatches[:3]}"
+
+
+def test_registry_guard():
+    # the correctness gate checks at most 50 queries, and a refactor of
+    # the shared operators must not change an oracle string unnoticed: a
+    # deliberate oracle edit updates this digest in the same commit
+    assert len(queries()) <= 50
+    digest = hashlib.sha256(json.dumps(oracle_sql(), sort_keys=True).encode())
+    assert digest.hexdigest()[:16] == "20c17ff6df69e8aa"

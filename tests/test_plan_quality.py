@@ -166,22 +166,38 @@ def test_widen_input_scan_width_estimate(spark, tmp_path):
     assert _widen_input(mem) is mem  # no needless full-frame shuffle
 
 
-def test_widen_input_falls_back_to_file_count(spark, tmp_path, monkeypatch):
-    # where the scan-width estimate is unavailable (remote store) a
-    # file-backed frame with fewer files than cores is still widened
+def test_widen_input_estimates_any_scheme(spark, tmp_path):
+    # the estimate reads lengths through Hadoop's FileSystem, so a frame
+    # read through a scheme URI (here file://, as for s3a:// or hdfs://)
+    # is estimated like a bare path: a one-file frame is widened by both
+    # the pipeline and the registry's reader, and a frame of as many
+    # files as cores is already wide
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from entity_linking_spark.plans import pipeline
+    from entity_linking_spark.plans.pipeline import (
+        _widen_input,
+        estimated_scan_width,
+    )
     from entity_linking_spark.queries import _tw
 
-    monkeypatch.setattr(pipeline, "estimated_scan_width", lambda df: None)
     n_par = spark.sparkContext.defaultParallelism
     assert n_par > 1
     pq.write_table(
         pa.table({"id": [1, 2, 3], "text": ["a", "b", "c"]}),
         str(tmp_path / "one.parquet"),
     )
-    one = spark.read.parquet(str(tmp_path / "one.parquet"))
-    assert pipeline._widen_input(one).rdd.getNumPartitions() == n_par
-    assert _tw(spark, str(tmp_path), "one").rdd.getNumPartitions() == n_par
+    uri = (tmp_path / "one.parquet").as_uri()
+    assert uri.startswith("file://")
+    one = spark.read.parquet(uri)
+    assert estimated_scan_width(one) == 1
+    assert _widen_input(one).rdd.getNumPartitions() == n_par
+    assert _tw(spark, tmp_path.as_uri(), "one").rdd.getNumPartitions() == n_par
+
+    many = tmp_path / "many"
+    many.mkdir()
+    for i in range(n_par):
+        pq.write_table(pa.table({"id": [i], "text": ["a"]}), str(many / f"{i}.parquet"))
+    wide = spark.read.parquet(many.as_uri())
+    assert estimated_scan_width(wide) == n_par
+    assert _widen_input(wide) is wide

@@ -132,6 +132,21 @@ def test_checkpointed_honours_cc_config(spark, corpus, tmp_path, monkeypatch):
     assert seen[1] == {"checkpoint_dir": None, "fuse_rounds": 2}
 
 
+def test_changed_input_rebuilds(spark, tmp_path):
+    # the stage digest covers the input: a run dir re-run after its input
+    # path was rewritten with another corpus rebuilds every stage instead
+    # of returning the old corpus's clusters
+    src, run_dir = str(tmp_path / "corpus"), str(tmp_path / "run_in")
+    write_parquet(src, n_entities=10, seed=42)
+    pages_a = spark.read.parquet(f"{src}/pages.parquet")
+    run_linkage_checkpointed(spark, pages_a, run_dir).collect()
+    write_parquet(src, n_entities=12, seed=7)
+    pages_b = spark.read.parquet(f"{src}/pages.parquet")
+    got = run_linkage_checkpointed(spark, pages_b, run_dir).collect()
+    want = link_pages(pages_b).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_digest_mismatch_forces_rebuild(spark, corpus, tmp_path):
     """Changed config params must invalidate stages built under the old
     config — stage reuse is keyed on (name, config digest), not name alone."""

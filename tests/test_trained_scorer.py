@@ -63,7 +63,7 @@ def test_trained_scorer_is_pure_codegen(corpus, spark):
 def test_sigmoid_column_values(spark):
     df = spark.createDataFrame([(1.0, 0.0), (0.0, 1.0)], "a double, b double")
     m = TrainedScorer(weights={"a": 2.0, "b": -2.0}, bias=0.0)
-    got = [r[0] for r in df.select(F.round(m.column(), 6)).collect()]
+    got = [r[0] for r in m.attach_score(df).select(F.round("score", 6)).collect()]
     import math
 
     sig = lambda z: 1 / (1 + math.exp(-z))  # noqa: E731
