@@ -11,9 +11,10 @@ swap the write in ``stage`` and ``_read`` for
 Each stage costs one write job and one manifest save (a bucketed stage
 may add the shuffle that clusters it on its bucket columns): the stage's
 row count comes from an ``Observation`` on the write job itself, and the
-manifest is the only record beside the stage's files. Per-partition
-counters are derived on demand by ``StageCheckpointer.metrics()`` from the
-stages as a resumed run reads them.
+manifest is the only record beside the stage's files. The manifest goes
+through the run dir's Hadoop ``FileSystem`` as the stages do, so a run dir
+on any scheme resumes. Per-partition counters are derived on demand by
+``StageCheckpointer.metrics()`` from the stages as a resumed run reads them.
 
 Reference analog: the reference resumes via epoch checkpoints +
 ``start_from_page_num`` (/root/reference/src/trainer.py:169,
@@ -24,9 +25,9 @@ entry (analog of src/experiment.py:67-98 results files).
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
-import os
 import re
 import time
 from collections.abc import Callable
@@ -34,6 +35,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from entity_linking_spark.session import hadoop_fs
 
 
 _ADDR_REPR = re.compile(r" (object|at) 0x[0-9a-fA-F]+>")
@@ -108,27 +111,35 @@ class StageCheckpointer:
         ckpt = StageCheckpointer(spark, "/data/run1")
         blocks = ckpt.stage("blocks", lambda: block_keys(pages), bucket_by="block_key")
         pairs  = ckpt.stage("pairs",  lambda: candidate_pairs(blocks))
+
+    ``base_dir`` may be on any scheme the session can write; a relative
+    path resolves against the JVM's working directory, as a write does.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        os.makedirs(base_dir, exist_ok=True)
-        self._manifest_path = os.path.join(base_dir, "manifest.json")
+        self._fs, self._root = hadoop_fs(spark, base_dir)
+        self._fs.mkdirs(self._root)
+        self._manifest_path = spark._jvm.org.apache.hadoop.fs.Path(self._root, "manifest.json")
         self.manifest: dict[str, dict] = {}
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as fh:
-                self.manifest = json.load(fh)
+        if self._fs.exists(self._manifest_path):
+            with contextlib.closing(self._fs.open(self._manifest_path)) as fh:
+                self.manifest = json.loads(fh.readAllBytes())
 
     # -- manifest ----------------------------------------------------------
     def _save_manifest(self) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.manifest, fh, indent=2, sort_keys=True)
-        os.replace(tmp, self._manifest_path)  # atomic completion marker
+        hfs, tmp = self.spark._jvm.org.apache.hadoop.fs, self._manifest_path.suffix(".tmp")
+        with contextlib.closing(self._fs.create(tmp, True)) as fh:
+            fh.write(json.dumps(self.manifest, indent=2, sort_keys=True).encode())
+        # HDFS's FileSystem.rename refuses an existing target; FileContext's replaces it
+        overwrite = self.spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+        overwrite[0] = hfs.Options.Rename.OVERWRITE
+        fc = hfs.FileContext.getFileContext(self._root.toUri(), self._fs.getConf())
+        fc.rename(tmp, self._manifest_path, overwrite)  # the completion marker
 
-    def _stage_path(self, name: str) -> str:
-        return os.path.join(self.base_dir, f"stage_{name}")
+    def _stage_path(self, name: str):
+        return self.spark._jvm.org.apache.hadoop.fs.Path(self._root, f"stage_{name}")
 
     def _table(self, name: str) -> str:
         return (
@@ -139,7 +150,7 @@ class StageCheckpointer:
 
     def is_complete(self, name: str, digest: str | None = None) -> bool:
         entry = self.manifest.get(name, {})
-        if not (entry.get("complete", False) and os.path.exists(self._stage_path(name))):
+        if not (entry.get("complete", False) and self._fs.exists(self._stage_path(name))):
             return False
         # A digest mismatch means the stage was built under a different
         # config — treat as incomplete and rebuild rather than silently
@@ -178,14 +189,15 @@ class StageCheckpointer:
 
         One write job per stage: the manifest's ``rows`` is an
         ``Observation`` on that job, and completion, ``rows``, ``digest``,
-        ``schema`` and the bucket spec land in one atomic manifest save.
+        ``schema``, the count of data ``files`` and the bucket spec land in
+        one manifest save.
         """
         if self.is_complete(name, digest=digest):
             return self._read(name)
         bb = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by or [])
         obs = Observation()
         df = build().observe(obs, F.count(F.lit(1)).alias("rows"))
-        path = self._stage_path(name)
+        path = str(self._stage_path(name))
         spec: dict = {}
         t0 = time.time()
         if bb:
@@ -220,6 +232,11 @@ class StageCheckpointer:
                 f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
             ),
             "digest": digest,
+            # data files, as the stage's FileSystem lists them
+            "files": sum(
+                not st.getPath().getName().startswith(("_", "."))
+                for st in self._fs.listStatus(self._stage_path(name))
+            ),
             **spec,
         }
         self._save_manifest()
@@ -229,11 +246,8 @@ class StageCheckpointer:
         """The completed stage as a later stage (or a resumed run) reads it."""
         e = self.manifest[name]
         if "bucket_by" not in e:
-            reader = self.spark.read
-            if "schema_ddl" in e:  # absent from manifests of older versions
-                # a given schema spares the job that infers it from the files
-                reader = reader.schema(e["schema_ddl"])
-            return reader.parquet(self._stage_path(name))
+            # a given schema spares the job that infers it from the files
+            return self.spark.read.schema(e["schema_ddl"]).parquet(str(self._stage_path(name)))
         tbl = self._table(name)
         if not self.spark.catalog.tableExists(tbl):
             cols = ", ".join(e["bucket_by"])

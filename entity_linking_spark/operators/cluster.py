@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from entity_linking_spark.functions.similarity import union_find
+from entity_linking_spark.session import hadoop_fs
 
 # Edge sets up to this size are labelled in one task (``_label_in_one_task``),
 # larger ones by the star rounds. At the bound, a generated graph of 1M
@@ -212,11 +213,8 @@ def connected_components(
                 opt = rdd.getCheckpointFile()
                 if not opt.isDefined():
                     continue
-                hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(opt.get())
-                fs = hpath.getFileSystem(
-                    spark.sparkContext._jsc.hadoopConfiguration()
-                )
-                fs.delete(hpath, True)
+                fs, path = hadoop_fs(spark, opt.get())
+                fs.delete(path, True)
             except Exception:  # pragma: no cover - best effort
                 pass
 

@@ -17,7 +17,8 @@ One stage graph (SURVEY.md §7.1), defined once in ``_run_stages``:
                 min member id)
 
 Every runner is the same graph with its own materialization callback:
-``link_pages`` persists ``pages``, ``blocks`` and ``payload`` in memory;
+``link_pages`` persists ``pages``, ``blocks`` and ``payload`` in memory
+(the last two until connected components has read them);
 ``checkpoint.run_linkage_checkpointed`` writes each stage to a resumable
 checkpoint (its dual-bucket layout adds a stage of its own between
 ``pairs`` and ``scored``); ``score_candidate_pairs`` materializes nothing
@@ -52,21 +53,16 @@ from entity_linking_spark.operators.scoring import (
     doc_payload,
     score_pairs,
 )
-
-
-def _hadoop_conf(df: DataFrame):
-    # the SparkContext's conf overlaid with the session's, as a scan reads
-    return df.sparkSession._jsparkSession.sessionState().newHadoopConf()
+from entity_linking_spark.session import hadoop_fs
 
 
 def input_file_statuses(df: DataFrame) -> list:
     """The Hadoop ``FileStatus`` of every file ``df`` scans (none for an
     in-memory frame), statted through the ``FileSystem`` of its scheme
     with the session's Hadoop conf, as the scan itself reads them."""
-    jvm, conf = df.sparkSession._jvm, _hadoop_conf(df)
-    fs = jvm.org.apache.hadoop.fs
-    paths = [fs.Path(jvm.java.net.URI(f)) for f in df.inputFiles()]
-    return [p.getFileSystem(conf).getFileStatus(p) for p in paths]
+    spark = df.sparkSession
+    found = [hadoop_fs(spark, spark._jvm.java.net.URI(f)) for f in df.inputFiles()]
+    return [fs.getFileStatus(p) for fs, p in found]
 
 
 def estimated_scan_width(df: DataFrame) -> int | None:
@@ -102,12 +98,13 @@ def estimated_scan_width(df: DataFrame) -> int | None:
     statuses = input_file_statuses(df)
     total = sum(st.getLen() for st in statuses) + open_cost * len(files)
     max_split = max(min(max_pb, max(open_cost, total // n_par)), 1)
-    parquet, hconf = spark._jvm.org.apache.parquet.hadoop, _hadoop_conf(df)
+    parquet = spark._jvm.org.apache.parquet.hadoop
     width = 0
     for st in statuses:
         splits = max(1, math.ceil(st.getLen() / max_split))
         if splits > 1 and st.getPath().getName().endswith(".parquet"):
-            footer = parquet.util.HadoopInputFile.fromStatus(st, hconf)
+            fs, _ = hadoop_fs(spark, st.getPath().toUri())
+            footer = parquet.util.HadoopInputFile.fromStatus(st, fs.getConf())
             with contextlib.closing(parquet.ParquetFileReader.open(footer)) as r:
                 splits = min(splits, r.getRowGroups().size() or splits)
         width += splits
@@ -361,13 +358,22 @@ def link_pages(
     config, so LinkageConfig stays a digestible value object.
     """
 
+    persisted: dict[str, DataFrame] = {}
+
     def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         # the stages read more than once: pages (blocking, payload, id
         # restore), blocks (both sides of the pair self-join; the two
         # exchanges differ by projection, so AQE cannot reuse), payload
         # (both sides of every pair)
         df = build()
-        return df.persist() if name in ("pages", "blocks", "payload") else df
+        if name in ("pages", "blocks", "payload"):
+            df = persisted[name] = df.persist()
+        elif name == "clusters":
+            # CC's eager edge checkpoint has read blocks and payload; the
+            # lazy result reads only pages and CC's checkpoints
+            persisted["blocks"].unpersist()
+            persisted["payload"].unpersist()
+        return df
 
     return _run_stages(
         pages, stage, config or LinkageConfig(), id_col, text_col, url_col,

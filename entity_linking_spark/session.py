@@ -17,11 +17,24 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import SparkSession
 
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def hadoop_fs(spark: SparkSession, path):
+    """→ (Hadoop FileSystem, qualified Path) of a path string or URI under
+    the session's Hadoop conf; a relative path resolves against the JVM's cwd."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    # unchecksummed: once a non-Hadoop writer (Python open) rewrites a file,
+    # its stale .crc fails the next Hadoop read with ChecksumException
+    if is_instance_of(spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        fs = fs.getRawFileSystem()
+    return fs, fs.makeQualified(p)
 
 
 def get_spark(

@@ -6,8 +6,8 @@ Cluster launch (the engine ships as a --py-files zip, no install step):
     spark-submit --master <cluster-url> \\
         --py-files /tmp/elspark.zip \\
         scripts/submit_pipeline.py \\
-        --pages  s3://bucket/pages/            \\
-        --out    s3://bucket/runs/run1/        \\
+        --pages  s3a://bucket/pages/           \\
+        --out    s3a://bucket/runs/run1/       \\
         --threshold 0.62
 
 Local smoke (what the sandbox supports):
@@ -20,7 +20,9 @@ The job is the checkpointed pipeline (``run_linkage_checkpointed``): every
 stage lands in ``--out`` in one write job, recorded with its row count in
 the run's manifest (``StageCheckpointer.metrics()`` gives the
 per-partition counters), so re-submitting after a failure resumes
-mid-pipeline.
+mid-pipeline. ``--out`` may be on any scheme the session can write: the
+manifest goes through the same Hadoop ``FileSystem`` as the stages (on
+``s3a`` its rename is a copy, not an atomic replace).
 """
 
 from __future__ import annotations

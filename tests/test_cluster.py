@@ -253,20 +253,23 @@ def test_unconverged_warns(spark, monkeypatch):
 def test_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     # checkpoint_dir switches localCheckpoint → reliable checkpoint: the
     # result is identical and checkpoint files land under the given dir,
-    # on the local finish and on the star rounds (bound 0)
+    # on the local finish and on the star rounds (bound 0), for a plain
+    # path and a file:// URI
+    import itertools
     import os
 
     edges = [(i, i + 1) for i in range(15)] + [(100, 101)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    for bound in (LOCAL_MAX_EDGES, 0):
+    for bound, uri in itertools.product((LOCAL_MAX_EDGES, 0), (False, True)):
         monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", bound)
-        ckdir = str(tmp_path / f"cc_ckpt{bound}")
+        ckdir = str(tmp_path / f"cc_ckpt{bound}_{uri}")
+        given = f"file://{ckdir}" if uri else ckdir
         got = {
             r["node"]: r["component"]
-            for r in connected_components(df, checkpoint_dir=ckdir).collect()
+            for r in connected_components(df, checkpoint_dir=given).collect()
         }
         exp = {i: 0 for i in range(16)} | {100: 100, 101: 100}
-        assert got == exp, bound
+        assert got == exp, (bound, uri)
         # reliable checkpoints were actually written to the shared dir
         found = [
             f for root, _, files in os.walk(ckdir) for f in files

@@ -3,6 +3,7 @@ output with completed stages reused (FIXTURES-style kill-and-rerun test)."""
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,6 +148,34 @@ def test_changed_input_rebuilds(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+def test_uri_run_dir_resumes(spark, corpus, tmp_path, monkeypatch):
+    # a run dir given as a file:// URI keeps its manifest beside its
+    # stages (no stray copy under the working directory), and a resume
+    # after the manifest is rewritten outside Hadoop (as perfbench does)
+    # rebuilds only the stages it lost
+    monkeypatch.chdir(tmp_path)
+    run_dir = tmp_path / "run"
+    want = sorted(map(tuple, link_pages(corpus).collect()))
+    got = run_linkage_checkpointed(spark, corpus, run_dir.as_uri()).collect()
+    assert sorted(map(tuple, got)) == want
+    manifest_path = run_dir / "manifest.json"
+    with open(manifest_path) as fh:
+        manifest = json.load(fh)
+    manifest.pop("clusters")
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    time.sleep(1.1)  # completed_at has one-second resolution
+    got = run_linkage_checkpointed(spark, corpus, run_dir.as_uri()).collect()
+    assert sorted(map(tuple, got)) == want
+    with open(manifest_path) as fh:
+        after = json.load(fh)
+    assert sorted(after) == sorted([*manifest, "clusters"])
+    for name, e in manifest.items():
+        assert after[name]["completed_at"] == e["completed_at"], name
+    assert os.listdir(tmp_path) == ["run"]
+    assert not [f for f in os.listdir(run_dir) if f.endswith(".crc")]
+
+
 def test_digest_mismatch_forces_rebuild(spark, corpus, tmp_path):
     """Changed config params must invalidate stages built under the old
     config — stage reuse is keyed on (name, config digest), not name alone."""
@@ -174,8 +203,6 @@ def test_changed_config_rebuilds_pipeline_stages(spark, corpus, tmp_path):
     with open(os.path.join(run_dir, "manifest.json")) as fh:
         first = json.load(fh)["blocks"]["completed_at"]
     # different blocking params: the 'blocks' stage must NOT be reused
-    import time
-
     time.sleep(1.1)
     run_linkage_checkpointed(
         spark, corpus, run_dir, LinkageConfig(max_block=32)
@@ -467,15 +494,17 @@ def test_bucketed_stages_one_file_per_bucket(spark, corpus, tmp_path, layout):
             if f.endswith(".parquet")
         ]
         assert 0 < len(files) <= e["num_buckets"], (name, len(files))
+        # the manifest records the stage's data files
+        assert e["files"] == len(files), (name, e["files"], files)
 
 
 def test_link_pages_persisted_rdds(spark, corpus):
-    # link_pages leaves pages, blocks and payload persisted, plus the CC
-    # edge checkpoint its lazy result reads; the local finish keeps no
-    # final edge set of star rounds
+    # link_pages leaves pages persisted, plus the CC edge checkpoint its
+    # lazy result reads: blocks and payload are released once CC has read
+    # them, and the local finish keeps no final edge set of star rounds
     _clean_slate(spark)
     out = link_pages(corpus)
     out.collect()
     left = len(spark.sparkContext._jsc.getPersistentRDDs())
     _clean_slate(spark)
-    assert left == 4
+    assert left == 2
